@@ -172,10 +172,10 @@ private[graft] object DeleteVectors {
         throw new IllegalStateException(s"dv entry ${e.rel} has no index"))
       idx.map(s => (ManifestTable.dataPath(root, e.rel), s.relEnc, s.offset, s.len, s.seq))
     }
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val conf = SerializableHadoopConf.broadcast(spark)
     val ds = spark.createDataset(slices)
       .flatMap { case (path, rel, off, len, seq) =>
-        decodePositions(readSliceBytes(path, off, len, conf.value))
+        decodePositions(readSliceBytes(path, off, len, conf.value.value))
           .map(p => (rel, p, seq))
       }.toDF("__file", "__pos", "__seq")
     if (withSeq) ds else ds.drop("__seq")

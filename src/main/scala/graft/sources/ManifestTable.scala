@@ -2055,7 +2055,7 @@ object ManifestTable {
     val spark = tombstones.sparkSession
     import spark.implicits._
     val stageDir = s"$root/stage/dvw_${UUID.randomUUID().toString.take(12)}"
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val conf = SerializableHadoopConf.broadcast(spark)
     // one blob per ~64 target files: parallel write at scale, a bounded
     // slice index per manifest entry, same one-ranged-read-per-file shape.
     // Parallelism follows BOTH backlog dimensions: ~64 target files per
@@ -2082,7 +2082,7 @@ object ManifestTable {
         else {
           val path = s"$stageDir/${UUID.randomUUID().toString.take(16)}.bin"
           val p = new org.apache.hadoop.fs.Path(path)
-          val fs = p.getFileSystem(conf.value)
+          val fs = p.getFileSystem(conf.value.value)
           val out = fs.create(p, true)
           val slices = Vector.newBuilder[(String, Long, Int, Long)]
           var offset = 0L
@@ -2827,7 +2827,7 @@ object ManifestTable {
   private def removeOrphanFilesDistributed(spark: SparkSession, root: String,
       cutoff: Long, dryRun: Boolean, docs: Seq[Doc]): Seq[String] = {
     import spark.implicits._
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val conf = SerializableHadoopConf.broadcast(spark)
     // referenced rels, tagged by tree: inline entries ride from the
     // driver (already loaded); shard CONTENTS expand on executors — the
     // driver never materializes the full file listing
@@ -2839,7 +2839,7 @@ object ManifestTable {
       else spark.createDataset(shardRels)
         .repartition(math.max(1, math.min(64, shardRels.size / 16 + 1)))
         .mapPartitions { it =>
-          val c = conf.value
+          val c = conf.value.value
           it.flatMap { rel =>
             val p = new org.apache.hadoop.fs.Path(s"$root/manifests/$rel")
             val fs = taskFs(p, c)
@@ -2862,7 +2862,7 @@ object ManifestTable {
       ("manifests", s"$root/manifests/shards", "shards/"))
     def listTask(it: Iterator[(String, String, String)])
         : Iterator[(String, String, String, Long, Boolean)] = {
-      val c = conf.value
+      val c = conf.value.value
       it.flatMap { case (tree, dir, prefix) =>
         val p = new org.apache.hadoop.fs.Path(dir)
         val fs = taskFs(p, c)
@@ -2879,7 +2879,7 @@ object ManifestTable {
     val deeper = subdirs
       .repartition(32)
       .mapPartitions { it =>
-        val c = conf.value
+        val c = conf.value.value
         it.flatMap { case (tree, dir, prefix) =>
           val p = new org.apache.hadoop.fs.Path(dir)
           val fs = taskFs(p, c)
@@ -2909,7 +2909,7 @@ object ManifestTable {
       spark.createDataset(orphans)
         .repartition(math.max(1, math.min(32, orphans.size / 64 + 1)))
         .foreachPartition { (it: Iterator[String]) =>
-          val c = conf.value
+          val c = conf.value.value
           it.foreach { s =>
             val p = new org.apache.hadoop.fs.Path(s)
             taskFs(p, c).delete(p, false); ()
@@ -3339,13 +3339,12 @@ object ManifestTable {
     if (ext.isEmpty) return (v0, 0L)
     val srcBase = cloneSrcOf(root).getOrElse(throw new IllegalStateException(
       s"$root carries ext/ manifest entries but no _clone_src sidecar"))
-    val conf = new SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = SerializableHadoopConf.broadcast(spark)
     val copies: Seq[(String, String)] = ext.map(e =>
       (s"$srcBase/${plainRel(e.rel)}", s"$root/data/${plainRel(e.rel)}"))
     val parts = math.max(1, math.min(64, copies.size / 16 + 1))
     val copied = spark.sparkContext.parallelize(copies, parts).mapPartitions { it =>
-      val c = conf.value
+      val c = conf.value.value
       it.map { case (src, dst) =>
         val sp = new org.apache.hadoop.fs.Path(src)
         val dp = new org.apache.hadoop.fs.Path(dst)

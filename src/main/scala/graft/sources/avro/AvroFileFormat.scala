@@ -94,10 +94,10 @@ class AvroFileFormat extends FileFormat with DataSourceRegister with Serializabl
     // the SESSION conf must reach the task-side open: s3a credentials /
     // endpoints / custom filesystems ride it, and a bare Configuration()
     // would silently drop them (the parquet/orc legs propagate it too)
-    val confSer = new graft.sources.SerializableHadoopConf(hadoopConf)
+    val confSer = graft.sources.SerializableHadoopConf.broadcast(sparkSession, hadoopConf)
     (file: PartitionedFile) => {
       val path = new Path(file.filePath.toString)
-      val in = new org.apache.avro.mapred.FsInput(path, confSer.value)
+      val in = new org.apache.avro.mapred.FsInput(path, confSer.value.value)
       val reader = org.apache.avro.file.DataFileReader.openReader(
         in, new GenericDatumReader[GenericRecord]())
         .asInstanceOf[org.apache.avro.file.DataFileReader[GenericRecord]]

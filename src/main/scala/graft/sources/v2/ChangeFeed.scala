@@ -1,6 +1,7 @@
 package graft.sources.v2
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
@@ -514,10 +515,8 @@ private[v2] object ChangeFeedPlanner {
         // tables never have identity columns, so readPart is empty and
         // the emitted layout is exactly readData. Append-only by
         // construction — the planner declines any delete artifact.
-        return new AvroManifestScan(
-          rels.map(rel => ManifestTable.dataPath(root, rel)),
-          readData, readData,
-          maxSplitBytes = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes)
+        return new AvroManifestScan(spark,
+          rels.map(rel => ManifestTable.dataPath(root, rel)), readData, readData)
       // ext/ (shallow-clone) entries resolve into the source pool — the
       // clone's v1 appears in the feed as an insert of every cloned row
       val files = rels.map(rel => new Path(ManifestTable.dataPath(root, rel)))
@@ -541,7 +540,7 @@ private[v2] object ChangeFeedPlanner {
 
   def readerFactory(ctx: Ctx, inner: PartitionReaderFactory): PartitionReaderFactory =
     new ChangeReaderFactory(inner, ctx.emitted, ctx.outPlan,
-      new SerializableHadoopConf(ctx.spark.sparkContext.hadoopConfiguration))
+      SerializableHadoopConf.broadcast(ctx.spark))
 
   /** Plan the change slices of window (sV, eV] — or, for the streaming
     * initial snapshot, the live rows AT eV as inserts with every delete
@@ -813,7 +812,7 @@ private[v2] object ChangeFeedPlanner {
 private[v2] class ChangeReaderFactory(inner: PartitionReaderFactory,
                                       emitted: StructType,
                                       outPlan: Seq[Either[Boolean, Int]],
-                                      conf: SerializableHadoopConf)
+                                      conf: Broadcast[SerializableHadoopConf])
     extends PartitionReaderFactory {
 
   // per-PARTITION verdict — the planner forces a whole window to row mode
@@ -862,14 +861,14 @@ private[v2] class ChangeReaderFactory(inner: PartitionReaderFactory,
     lazy val base: Long = cp.inner match {
       case fp: FilePartition =>
         val f = fp.files.head
-        MorDeletes.baseRowFor(f.filePath.toPath, f.start, conf.value)
+        MorDeletes.baseRowFor(f.filePath.toPath, f.start, conf.value.value)
       case _ => 0L
     }
     def posOf(src: PosSource): Array[Long] =
       if (src.isEmpty) Array.emptyLongArray
-      else MorDeletes.positionsFor(src, cp.relEnc.get, conf.value)
+      else MorDeletes.positionsFor(src, cp.relEnc.get, conf.value.value)
     def eqSets(specs: Seq[EqDeleteSpec]) =
-      specs.map(s => (s, MorDeletes.loadEqKeys(s, conf.value)))
+      specs.map(s => (s, MorDeletes.loadEqKeys(s, conf.value.value)))
     val meta = new ChangeMeta(UTF8String.fromString(cp.changeType), cp.version)
 
     cp.kind match {
@@ -898,7 +897,7 @@ private[v2] class ChangeReaderFactory(inner: PartitionReaderFactory,
         s"delete-eq partition for ${cp.relEnc} planned with filtering " +
           "wrappers; EqKeepMultiRowReader requires the bare file reader")
       val loaded = cp.eqStages.map(st =>
-        (st, MorDeletes.loadEqKeys(st.spec, conf.value),
+        (st, MorDeletes.loadEqKeys(st.spec, conf.value.value),
           if (st.emit) UTF8String.fromString(st.changeType) else null))
       val pbv = cp.posByVersion.map { case (v, src) => (v, posOf(src)) }
       r = new EqKeepMultiRowReader(r, loaded, pbv, base, meta)

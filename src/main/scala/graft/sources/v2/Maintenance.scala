@@ -504,8 +504,7 @@ object Maintenance {
       throw new IllegalStateException(s"no committed version under $ident"))
     val entries = ManifestTable.liveEntries(root)
     val (del, data) = entries.partition(e => ManifestTable.isDeleteEntry(e.rel))
-    val conf = new graft.sources.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = graft.sources.SerializableHadoopConf.broadcast(spark)
     // ext/ (shallow-clone) entries probe the SOURCE pool — fsck on a
     // clone is exactly how source-side expiry breakage is detected
     val paths = entries.map(e => ManifestTable.dataPath(root, e.rel))
@@ -513,7 +512,7 @@ object Maintenance {
     val nMissing =
       if (paths.isEmpty) 0L
       else spark.sparkContext.parallelize(paths, parts).mapPartitions { it =>
-        val c = conf.value
+        val c = conf.value.value
         it.map { p =>
           val hp = new org.apache.hadoop.fs.Path(p)
           try {
@@ -542,7 +541,7 @@ object Maintenance {
         val bcRows = sc.broadcast(rowsByEnc)
         val dparts = math.max(1, math.min(64, del.size / 64 + 1))
         sc.parallelize(del, dparts).mapPartitions { it =>
-          val c = conf.value
+          val c = conf.value.value
           def decT(s: String): String = scala.util.Try(
             java.net.URLDecoder.decode(s,
               java.nio.charset.StandardCharsets.UTF_8)).getOrElse(s)

@@ -1,5 +1,7 @@
 package graft.sources.v2
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.execution.datasources.FilePartition
@@ -38,8 +40,7 @@ import graft.sources.SerializableHadoopConf
 class MorScan(delegate: Scan, declared: StructType, keepIdx: Array[Int],
               widened: Boolean, physicalBatch: StructType,
               posAffected: Set[String], posSources: Map[String, PosSource],
-              eqSpecs: Seq[EqDeleteSpec], dataSeqByRel: Map[String, Long],
-              conf: SerializableHadoopConf)
+              eqSpecs: Seq[EqDeleteSpec], dataSeqByRel: Map[String, Long])
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
@@ -121,7 +122,8 @@ class MorScan(delegate: Scan, declared: StructType, keepIdx: Array[Int],
 
   override def createReaderFactory(): PartitionReaderFactory =
     new MorReaderFactory(delegate.toBatch.createReaderFactory(), planned._2,
-      planned._3, posSources, eqSpecs, keepIdx, widened, declaredPhysical, conf)
+      planned._3, posSources, eqSpecs, keepIdx, widened, declaredPhysical,
+      SerializableHadoopConf.broadcast(SparkSession.active))
 
   /** The kept columns' physical types, for the row-path projection —
     * sliced from the caller-supplied physical BATCH layout, never from
@@ -386,7 +388,7 @@ private[v2] class MorReaderFactory(delegate: PartitionReaderFactory,
                                    keepIdx: Array[Int],
                                    widened: Boolean,
                                    keptPhysical: StructType,
-                                   conf: SerializableHadoopConf)
+                                   conf: Broadcast[SerializableHadoopConf])
     extends PartitionReaderFactory {
 
   private def idxOf(p: InputPartition): Int = p match {
@@ -399,13 +401,13 @@ private[v2] class MorReaderFactory(delegate: PartitionReaderFactory,
 
   private def eqSetsFor(p: InputPartition): Seq[(EqDeleteSpec, java.util.HashSet[Seq[Any]])] =
     eqBy.getOrElse(idxOf(p), Nil).map { i =>
-      (eqSpecs(i), MorDeletes.loadEqKeys(eqSpecs(i), conf.value))
+      (eqSpecs(i), MorDeletes.loadEqKeys(eqSpecs(i), conf.value.value))
     }
 
   private def positionsFor(p: InputPartition): Array[Long] =
     posBy.get(idxOf(p)) match {
       case Some(rel) => MorDeletes.positionsFor(
-        posSources.getOrElse(rel, PosSource.empty), rel, conf.value)
+        posSources.getOrElse(rel, PosSource.empty), rel, conf.value.value)
       case None => Array.emptyLongArray
     }
 
@@ -416,7 +418,7 @@ private[v2] class MorReaderFactory(delegate: PartitionReaderFactory,
   private def splitBaseFor(p: InputPartition): Long = p match {
     case fp: FilePartition if posBy.contains(fp.index) =>
       val f = fp.files.head
-      MorDeletes.baseRowFor(f.filePath.toPath, f.start, conf.value)
+      MorDeletes.baseRowFor(f.filePath.toPath, f.start, conf.value.value)
     case _ => 0L
   }
 

@@ -1859,8 +1859,7 @@ class VersionedScanBuilder(root: String, dataSchema: StructType,
         // no file index needed: the manifest IS the listing, __day rides in
         // dir names and is never part of the user schema, and filters are
         // re-applied exactly post-scan by Spark (pushFilters residual)
-        new AvroManifestScan(files.map(_.toString), physical(logicalRead), logicalRead,
-          maxSplitBytes = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes)
+        new AvroManifestScan(spark, files.map(_.toString), physical(logicalRead), logicalRead)
       case fmt =>
         // basePath roots partition discovery at the data pool — needed ONLY
         // for identity layouts, whose column values live in directory names.
@@ -2079,9 +2078,7 @@ class VersionedScanBuilder(root: String, dataSchema: StructType,
         ManifestTable.encodedRel(root, e.rel) -> e.seq.getOrElse(0L)).toMap
       new MorScan(named, StructType(declaredFields), keepIdx, widened,
         physicalBatch,
-        affectedRels, posSources, eqSpecs, dataSeqByRel,
-        new graft.sources.SerializableHadoopConf(
-          spark.sparkContext.hadoopConfiguration))
+        affectedRels, posSources, eqSpecs, dataSeqByRel)
     }
   }
 }

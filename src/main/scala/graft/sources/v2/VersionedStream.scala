@@ -66,8 +66,7 @@ private[v2] class VersionedMicroBatchStream(
       // the manifest IS the listing (no index/partition discovery); avro
       // tables never have identity columns, so readPart is empty and the
       // emitted layout is exactly readData
-      new AvroManifestScan(files.map(_.toString), readData, readData,
-        maxSplitBytes = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes)
+      new AvroManifestScan(spark, files.map(_.toString), readData, readData)
     else {
       val params =
         if (files.isEmpty || meta.identityCols.isEmpty) Map.empty[String, String]

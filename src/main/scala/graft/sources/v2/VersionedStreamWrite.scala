@@ -182,7 +182,7 @@ private[v2] class VersionedStreamWrite(root: String, fileSchema: StructType,
       // zero-row file like any other.
       val handle = GraftStreamWriteBridge.writerHandle(
         SparkSession.active, fileSchema, format)
-      val ctx = new TaskAttemptContextImpl(handle.conf.value,
+      val ctx = new TaskAttemptContextImpl(handle.conf,
         new TaskAttemptID(new TaskID(new JobID(
           "graftstream", (epochId % Int.MaxValue).toInt), TaskType.MAP, 0), 0))
       val path = s"$stageDir/e${epochId}_empty${handle.extension(ctx)}"
@@ -219,7 +219,7 @@ private class VersionedStreamWriterFactory(handle: GraftFileWriterHandle,
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private val ctx = new TaskAttemptContextImpl(handle.conf.value,
+      private val ctx = new TaskAttemptContextImpl(handle.conf,
         new TaskAttemptID(new TaskID(new JobID(
           "graftstream", (epochId % Int.MaxValue).toInt), TaskType.MAP, partitionId),
           (taskId % Int.MaxValue).toInt))

@@ -2,6 +2,7 @@ package org.apache.spark.sql.execution.datasources.v2
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
@@ -10,7 +11,7 @@ import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, T
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReaderFactory, Scan, Statistics, SupportsReportPartitioning, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FilePartition, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -69,6 +70,23 @@ object GraftScanBridge {
     org.apache.spark.sql.execution.datasources.v2.orc.OrcScan(
       spark, hadoopConf, index, dataSchema, readDataSchema,
       readPartitionSchema, options, None, pushedFilters)
+  }
+
+  /** Spark's own file-source split policy over an explicit listing: cut
+    * every splittable file at `maxSplit`, then bin-pack the splits
+    * largest-first into partitions of about `maxSplit` bytes (each file
+    * charged `spark.sql.files.openCostInBytes`). `maxSplit` comes from
+    * `FilePartition.maxSplitBytes` over the whole scan, so a table of many
+    * small files plans about one partition per core and a single large
+    * file plans many. */
+  def packSplits(spark: SparkSession, files: Seq[FileStatusWithMetadata],
+                 partitionValues: InternalRow, maxSplit: Long,
+                 isSplitable: Path => Boolean): Seq[FilePartition] = {
+    val splits = files.flatMap { f =>
+      PartitionedFileUtil.splitFiles(
+        f, f.getPath, isSplitable(f.getPath), maxSplit, partitionValues)
+    }.sortBy(-_.length)
+    FilePartition.getFilePartitions(spark, splits, maxSplit)
   }
 }
 
@@ -220,12 +238,8 @@ class GraftKeyGroupedScan(delegate: FileScan, clustering: Array[Transform],
     else {
       val maxSplit = FilePartition.maxSplitBytes(spark, selected)
       groups.toArray.flatMap { case (key, readerValues, files) =>
-        val splits = files.flatMap { f =>
-          PartitionedFileUtil.splitFiles(
-            f, f.getPath, delegate.isSplitable(f.getPath), maxSplit, readerValues)
-        }.sortBy(-_.length)
-        FilePartition.getFilePartitions(spark, splits, maxSplit)
-          .map(fp => GraftKeyedPartition(key, fp): InputPartition)
+        GraftScanBridge.packSplits(spark, files, readerValues, maxSplit,
+          delegate.isSplitable).map(fp => GraftKeyedPartition(key, fp): InputPartition)
       }
     }
   }

@@ -1,7 +1,9 @@
 package org.apache.spark.sql.execution.datasources.v2
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
@@ -13,10 +15,12 @@ import org.apache.spark.util.SerializableConfiguration
   * ([[graft.sources.v2.VersionedStreamWrite]]): the format's own
   * output-writer factory (identical codec/conf to batch writes), wrapped
   * because `ParquetUtils`/`OutputWriterFactory` are sql-internal. The
-  * handle is serializable and ships to executors. */
+  * handle is serializable and ships to executors; the write-job conf
+  * rides a broadcast, so each executor deserializes it once. */
 class GraftFileWriterHandle private[v2] (factory: OutputWriterFactory,
-                                         val conf: SerializableConfiguration)
+                                         jobConf: Broadcast[SerializableConfiguration])
     extends Serializable {
+  def conf: Configuration = jobConf.value.value
   def extension(ctx: TaskAttemptContext): String = factory.getFileExtension(ctx)
   def open(path: String, schema: StructType, ctx: TaskAttemptContext): GraftRowFileWriter =
     new GraftRowFileWriter(factory.newInstance(path, schema, ctx))
@@ -88,6 +92,6 @@ object GraftStreamWriteBridge {
         s"unstreamable storage format $other")
     }
     new GraftFileWriterHandle(factory,
-      new SerializableConfiguration(job.getConfiguration))
+      spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration)))
   }
 }

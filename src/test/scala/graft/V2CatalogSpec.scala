@@ -1586,6 +1586,35 @@ class V2CatalogSpec extends AnyFunSuite {
       assert(a === whole)
       assert(a.getLong(0) === 200000L)
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+
+    // small appended files pack into shared partitions (with each other
+    // or with the big file's tail range) once opening a file is cheap,
+    // and every record still reads exactly once
+    (0 until 4).foreach { i =>
+      spark.range(200000 + i * 100, 200000 + (i + 1) * 100)
+        .selectExpr("id AS k", "concat('row-', id) AS s")
+        .writeTo("gtest.ns.avsplit").append()
+    }
+    val all = spark.table("gtest.ns.avsplit")
+      .agg(count(lit(1)), sum("k"), countDistinct("k")).collect()(0)
+    assert(all.getLong(0) === 200400L && all.getLong(2) === 200400L)
+    val prevOpen = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (64 * 1024).toString)
+    spark.conf.set("spark.sql.files.openCostInBytes", "1024")
+    try {
+      val packed = spark.table("gtest.ns.avsplit")
+      val parts = packed.queryExecution.executedPlan
+        .collect { case b: BatchScanExec => b.scan }.map(GraftScans.innermost)
+        .flatMap(_.toBatch.planInputPartitions().collect {
+          case fp: org.apache.spark.sql.execution.datasources.FilePartition => fp })
+      assert(parts.size > 4, s"expected many partitions, got ${parts.size}")
+      assert(parts.exists(_.files.map(_.filePath).distinct.length > 1),
+        "some partition must pack ranges of different files")
+      assert(packed.agg(count(lit(1)), sum("k"), countDistinct("k")).collect()(0) === all)
+    } finally {
+      spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+      spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
+    }
   }
 
   test("per-file column stats: commits record footer min/max, scans skip files on non-partition predicates") {
