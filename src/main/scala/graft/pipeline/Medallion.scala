@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.gold.Analytics
@@ -30,10 +32,27 @@ object Medallion {
     Formats.writeCsvPartitioned(batch, base, "events", batchId)
   }
 
-  /** Silver: read all bronze batches (CSV glob + inferSchema), keep rows
-    * newer than the silver watermark, dedup the staging batch, and MERGE
-    * into the silver table. Returns the merged row count
-    * (`dags/2_bronze_to_silver.py:177-298` shape).
+  /** Silver: read the bronze batches the live silver snapshot has not
+    * consumed yet, keep rows newer than the silver watermark, dedup the
+    * staging batch, and MERGE into the silver table. Returns the merged
+    * row count (`dags/2_bronze_to_silver.py:177-298` shape).
+    *
+    * The reference re-reads the whole bronze glob every run; this step
+    * reads only `listed − consumed`, where `listed` is what the glob reads
+    * now (each file known by path, size and mtime) and `consumed` is the
+    * list the live snapshot was committed with (a [[Versioned]] sidecar,
+    * the set of files a Delta version or a Spark file-stream batch records
+    * as read). The result is the full re-read's, row for row: every row of
+    * a consumed file either failed the watermark filter of its own run or
+    * lost the dedup to a row now in silver, so its `ingestion_timestamp`
+    * is at or below today's watermark and the strict filter drops it
+    * anyway. A rollback restores the older list with the older watermark,
+    * so the files consumed since are read again. With no live snapshot,
+    * no list (older code, [[Versioned.compact]], a published branch) or a
+    * NULL watermark, `consumed` is empty: one code path, no switch. The
+    * staging columns are typed as the full re-read would type them
+    * ([[Formats.readCsv]] continues inference from silver's schema). A
+    * run that finds no new bronze file commits nothing.
     *
     * The MERGE result is committed through [[Versioned]] — immutable
     * snapshot dir + atomic pointer flip — the object-store-safe stand-in
@@ -41,26 +60,36 @@ object Medallion {
     * (watermark scan + merge input) is never touched by the write, and a
     * crash mid-commit leaves the old pointer intact. */
   def bronzeToSilver(spark: SparkSession, bronzeBase: String, silverRoot: String): Long = {
-    val bronze = Formats.readCsvGlob(spark, bronzeBase, "events")
+    val listed = Formats.csvGlobFiles(spark, bronzeBase, "events")
+    val live = Versioned.currentVersion(silverRoot)
+    val silver = live.map(Versioned.readVersion(spark, silverRoot, _))
+    val wm = silver.map(_.agg(max(col("ingestion_timestamp"))).first().get(0)).orNull
+    val consumed = live.filter(_ => wm != null)
+      .flatMap(Versioned.sidecar(silverRoot, _, ConsumedSidecar))
+      .fold(Set.empty[String])(_.linesIterator.toSet)
+    val fresh = listed.filterNot(f => consumed(consumedEntry(f)))
+    if (fresh.isEmpty && silver.isDefined) return silver.get.count() // nothing new: no commit
 
-    val silverExists = Versioned.exists(silverRoot)
+    val bronze = Formats.readCsv(spark, fresh.map(_.getPath.toString),
+      silver.fold(new StructType())(_.schema))
     val incremental =
-      if (!silverExists) bronze
-      else {
-        val wm = Versioned.read(spark, silverRoot)
-          .agg(max(col("ingestion_timestamp"))).first().get(0)
-        if (wm == null) bronze else Ingest.newerThanWatermark(bronze, "ingestion_timestamp", wm)
-      }
+      if (wm == null) bronze else Ingest.newerThanWatermark(bronze, "ingestion_timestamp", wm)
 
     val staging = Ingest.dedupLatest(incremental, Seq("event_id"), "ingestion_timestamp", "event_id")
 
-    val merged =
-      if (!silverExists) staging
-      else Merge.upsert(Versioned.read(spark, silverRoot), staging, Seq("event_id"))
+    val merged = silver.fold(staging)(Merge.upsert(_, staging, Seq("event_id")))
 
-    Versioned.commit(merged, silverRoot)
+    Versioned.commit(merged, silverRoot,
+      sidecars = Map(ConsumedSidecar -> listed.map(consumedEntry).mkString("\n")))
     Versioned.read(spark, silverRoot).count()
   }
+
+  /** Sidecar of a silver snapshot listing the bronze files it consumed,
+    * one [[consumedEntry]] line each. */
+  private val ConsumedSidecar = "consumed"
+
+  private def consumedEntry(f: FileStatus): String =
+    s"${f.getLen}\t${f.getModificationTime}\t${f.getPath}"
 
   /** Gold: full-refresh analytics over a silver events table, fanned out
     * per format with partitioned writes
@@ -68,13 +97,17 @@ object Medallion {
   def silverToGold(spark: SparkSession, silverRoot: String, goldBase: String): Map[String, String] = {
     val events = Versioned.read(spark, silverRoot)
     events.createOrReplaceTempView("silver_events")   // S12 temp-view staging
+    // cached: the three format writes share one scan and aggregate of silver
     val monthly = spark.sql(
       """SELECT year(ts) AS ano, month(ts) AS mes, user_id,
         |       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS volume,
         |       COUNT(*) AS total_transacoes
         |FROM silver_events WHERE ts IS NOT NULL GROUP BY 1, 2, 3""".stripMargin)
-    val out = Formats.fanout(monthly, goldBase, "monthly_balance", partitionCols = Seq("ano", "mes"))
-    spark.catalog.dropTempView("silver_events")
-    out
+      .repartition(col("ano"), col("mes")).cache()
+    try Formats.fanout(monthly, goldBase, "monthly_balance", partitionCols = Seq("ano", "mes"))
+    finally {
+      monthly.unpersist()
+      spark.catalog.dropTempView("silver_events")
+    }
   }
 }

@@ -7,18 +7,13 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Bronze→silver ingestion operators (reference:
-  * `dags/2_bronze_to_silver.py:177-229`): CSV/glob reads, the
-  * application-level incremental watermark filter (P3), and key dedup
-  * (A12) — here in its deterministic row_number form so results are
-  * oracle-comparable (the reference's `dropDuplicates` keeps an arbitrary
-  * row; SURVEY §7.4 flags this nondeterminism).
+  * `dags/2_bronze_to_silver.py:177-229`): the application-level
+  * incremental watermark filter (P3) and key dedup (A12) — here in its
+  * deterministic row_number form so results are oracle-comparable (the
+  * reference's `dropDuplicates` keeps an arbitrary row; SURVEY §7.4 flags
+  * this nondeterminism). The CSV reads live in [[graft.sources.Formats]].
   */
 object Ingest {
-
-  /** S3/S4: headered CSV read with schema inference over a glob of batch
-    * directories. */
-  def readCsvGlob(spark: SparkSession, glob: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(glob)
 
   /** P3: watermark-style change capture — keep rows strictly newer than the
     * max timestamp already processed. The scalar watermark is a one-row

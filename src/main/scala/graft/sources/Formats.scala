@@ -1,10 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, NullType, StructType}
 
 /** Source/sink surface of the reference (SURVEY §2.1):
-  * CSV partitioned/static writes + glob reads (S1-S4), multi-format
+  * CSV partitioned/static writes + glob listing and reads (S1-S4), multi-format
   * fan-out (S7-S9), existence probes and DDL (S10-S12).
   *
   * The reference writes every silver/gold table once per file format
@@ -36,11 +41,45 @@ object Formats {
   def writeCsvStatic(df: DataFrame, base: String, table: String): Unit =
     df.write.mode("overwrite").option("header", "true").csv(s"$base/$table")
 
-  /** S3/S4: headered CSV glob read across all batch partitions, schema
-    * inferred (mirrors `dags/2_bronze_to_silver.py:177-185`). */
-  def readCsvGlob(spark: SparkSession, base: String, table: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(s"$base/$table/*")
+  /** S3/S4, listing half: the files the reference's headered CSV glob
+    * over every batch partition of `<base>/<table>` reads
+    * (`dags/2_bronze_to_silver.py:177-185`), without opening any of them.
+    * The listing is Spark's own file index, so hidden `_`/`.` names are
+    * skipped exactly as the read skips them. */
+  def csvGlobFiles(spark: SparkSession, base: String, table: String): Seq[FileStatus] =
+    spark.read.schema("c STRING") // a given schema: nothing is read to infer one
+      .csv(s"$base/$table/*").queryExecution.analyzed
+      .collectFirst { case l: LogicalRelation => l.relation } match {
+      case Some(HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _)) =>
+        index.allFiles()
+      case other => throw new IllegalStateException(s"unexpected CSV relation $other")
+    }
+
+  /** S3/S4, reading half: headered CSV read of `files`, typed by CSV
+    * schema inference (the reference reads with `inferSchema`). `prior`
+    * continues an earlier inference: its column types seed the inference
+    * fold, so the result is typed as if the files `prior` was inferred
+    * from were read in the same call — a full re-read's types, from one
+    * inference pass over `files` alone. A column that was empty in every
+    * earlier row is the exception: `prior` holds it as STRING (CSV's type
+    * for all-empty columns), which a full re-read would refine. */
+  def readCsv(spark: SparkSession, files: Seq[String], prior: StructType): DataFrame = {
+    val reader = spark.read.option("header", "true")
+    val raw = reader.csv(files: _*) // every column STRING: the tokens inference sees
+    val names = raw.columns
+    val infer = new CSVInferSchema(new CSVOptions(
+      Map("header" -> "true", "inferSchema" -> "true"),
+      spark.sessionState.conf.csvColumnPruning, spark.sessionState.conf.sessionLocalTimeZone))
+    val seed: Array[DataType] =
+      names.map(n => prior.find(_.name == n).fold[DataType](NullType)(_.dataType))
+    val types = SQLExecution.withSQLConfPropagated(spark.asInstanceOf[classic.SparkSession]) {
+      raw.queryExecution.toRdd
+        .map(r => Array.tabulate(r.numFields)(i =>
+          if (r.isNullAt(i)) null else r.getUTF8String(i).toString))
+        .aggregate(seed)(infer.inferRowType, infer.mergeRowTypes)
+    }
+    reader.schema(StructType(infer.toStructFields(types, names))).csv(files: _*)
+  }
 
   /** S7-S9: write `df` once per format, optionally partitioned, with the
     * reference's compression/file-size targets. Returns format→path. */

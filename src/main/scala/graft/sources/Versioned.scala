@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
   * {{{
   *   <root>/v=1/part-*.parquet     immutable snapshot 1
   *   <root>/v=2/part-*.parquet     immutable snapshot 2
+  *   <root>/v=2/_<name>            optional sidecar committed with snapshot 2
   *   <root>/_CURRENT               text file holding the live version id
   * }}}
   *
@@ -109,18 +110,23 @@ object Versioned {
     * [[read]]/[[readVersion]], so the table's USER schema never changes.
     * Readers filter on the timestamp through [[readDayRange]], which
     * re-derives the partition predicate — the query never mentions the
-    * partition column, which is the hidden-partitioning contract. */
+    * partition column, which is the hidden-partitioning contract.
+    *
+    * `sidecars`: small text files published WITH the snapshot (Delta
+    * commits the files a version consumed in its log entry the same way),
+    * written as `_<name>` into `v=N` before the pointer flip. They become
+    * visible, roll back and age out exactly with their snapshot, and the
+    * `_` prefix keeps them out of every data read. Read back with
+    * [[sidecar]]. */
   def commit(df: DataFrame, root: String, retain: Int = 2,
-             partitionDayOf: Option[String] = None): Long = {
+             partitionDayOf: Option[String] = None,
+             sidecars: Map[String, String] = Map.empty): Long = {
     require(retain >= 1, "must retain at least the live snapshot")
+    sidecars.keys.foreach(n => require(n.matches("[a-z][a-z0-9-]*") && !n.startsWith("metadata"),
+      s"illegal sidecar name '$n'"))
     val next = allocateVersion(root)
-    partitionDayOf match {
-      case Some(ts) =>
-        df.withColumn(DayCol, to_date(col(ts)))
-          .write.mode("overwrite").partitionBy(DayCol).parquet(s"$root/v=$next")
-      case None =>
-        df.write.mode("overwrite").parquet(s"$root/v=$next")
-    }
+    writeSnapshot(df, root, next, partitionDayOf)
+    sidecars.foreach { case (n, body) => MetaIO.write(sidecarPath(root, next, n), body) }
 
     flipPointer(root, next)
 
@@ -133,6 +139,28 @@ object Versioned {
     }
     next
   }
+
+  /** Sidecar `name` as [[commit]] published it with snapshot `version`;
+    * None when that commit wrote none (older code, [[compact]],
+    * [[commitToBranch]]). */
+  def sidecar(root: String, version: Long, name: String): Option[String] = {
+    val p = sidecarPath(root, version, name)
+    if (MetaIO.exists(p)) Some(MetaIO.readString(p)) else None
+  }
+
+  private def sidecarPath(root: String, version: Long, name: String): String =
+    s"$root/v=$version/_$name"
+
+  /** Write `df` as the immutable data of snapshot `v`. */
+  private def writeSnapshot(df: DataFrame, root: String, v: Long,
+                            partitionDayOf: Option[String]): Unit =
+    partitionDayOf match {
+      case Some(ts) =>
+        df.withColumn(DayCol, to_date(col(ts)))
+          .write.mode("overwrite").partitionBy(DayCol).parquet(s"$root/v=$v")
+      case None =>
+        df.write.mode("overwrite").parquet(s"$root/v=$v")
+    }
 
   /** Win-or-fail snapshot-version allocation: every writer — main commit
     * or branch commit — CLAIMS its `v=N` with an exclusive-create marker
@@ -225,13 +253,7 @@ object Versioned {
                      partitionDayOf: Option[String] = None): Long = {
     branchHead(root, branch) // the branch must exist
     val next = allocateVersion(root) // claimed: can't collide with main commits
-    partitionDayOf match {
-      case Some(ts) =>
-        df.withColumn(DayCol, to_date(col(ts)))
-          .write.mode("overwrite").partitionBy(DayCol).parquet(s"$root/v=$next")
-      case None =>
-        df.write.mode("overwrite").parquet(s"$root/v=$next")
-    }
+    writeSnapshot(df, root, next, partitionDayOf)
     MetaIO.writeAtomic(s"${branchesDir(root)}/$branch", next.toString)
     next
   }

@@ -1,13 +1,17 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.Medallion
-import graft.sources.Formats
+import graft.silver.{Ingest, Merge}
+import graft.sources.{Formats, Versioned}
 import graft.streaming.MicroBatch
 
 class PipelineAndStreamingSpec extends AnyFunSuite {
@@ -38,6 +42,116 @@ class PipelineAndStreamingSpec extends AnyFunSuite {
     assert(back.count() > 0)
     assert(back.columns.toSet ===
       Set("ano", "mes", "user_id", "volume", "total_transacoes"))
+  }
+
+  /** The bronze→silver step as the reference runs it: re-read the whole
+    * bronze glob, keep rows newer than the silver watermark, dedup, merge. */
+  private def fullGlobSilver(bronze: String, silver: String): Unit = {
+    val all = spark.read.option("header", "true").option("inferSchema", "true")
+      .csv(s"$bronze/events/*")
+    val silverExists = Versioned.exists(silver)
+    val incremental =
+      if (!silverExists) all
+      else {
+        val wm = Versioned.read(spark, silver)
+          .agg(max(col("ingestion_timestamp"))).first().get(0)
+        if (wm == null) all else Ingest.newerThanWatermark(all, "ingestion_timestamp", wm)
+      }
+    val staging = Ingest.dedupLatest(incremental, Seq("event_id"), "ingestion_timestamp", "event_id")
+    val merged =
+      if (!silverExists) staging
+      else Merge.upsert(Versioned.read(spark, silver), staging, Seq("event_id"))
+    Versioned.commit(merged, silver)
+  }
+
+  test("medallion: reading only unconsumed bronze files equals the full-glob re-read") {
+    val work = Files.createTempDirectory("medallion_inc").toString
+    val bronze = s"$work/bronze"
+    val silver = s"$work/silver/events"; val reference = s"$work/reference/events"
+    val events = Tables.events(spark, sf)
+    val total = events.count()
+    def land(batchId: String, df: DataFrame): Unit =
+      Formats.writeCsvPartitioned(df, bronze, "events", batchId)
+    def consumed: Option[Seq[String]] =
+      Versioned.sidecar(silver, Versioned.currentVersion(silver).get, "consumed")
+        .map(_.linesIterator.toSeq)
+    def csvFiles: Int = Files.walk(Paths.get(bronze)).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".csv"))
+    def watermark: Any = Versioned.read(spark, silver)
+      .agg(max(col("ingestion_timestamp"))).first().get(0)
+    def step(what: String): Long = {
+      val n = Medallion.bronzeToSilver(spark, bronze, silver)
+      fullGlobSilver(bronze, reference)
+      val (got, want) = (Versioned.read(spark, silver), Versioned.read(spark, reference))
+      assert(got.schema === want.schema, what)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, what)
+      assert(n === want.count(), what)
+      n
+    }
+
+    // first load: silver is new, every listed file is read and recorded
+    Medallion.landBronzeBatch(spark, sf, bronze, "b1", 3, 0)
+    Medallion.landBronzeBatch(spark, sf, bronze, "b1b", 3, 1)
+    val n1 = step("first load")
+    assert(consumed.map(_.size) === Some(csvFiles))
+
+    // re-delivered keys with new values win the merge
+    land("b2", events.where(col("event_id") % 2 === 0 && col("event_id") % 3 =!= 2)
+      .withColumn("value", col("value") + 1.0)
+      .withColumn("ingestion_timestamp", current_timestamp()))
+    assert(step("re-delivered keys") === n1)
+    assert(consumed.map(_.size) === Some(csvFiles))
+
+    // a late batch at or below the watermark is listed but skipped
+    val wm = watermark
+    land("late", events.where(col("event_id") % 5 === 0)
+      .withColumn("event_type", lit("late"))
+      .withColumn("ingestion_timestamp",
+        when(col("event_id") % 2 === 0, lit(wm)).otherwise(lit(wm) - expr("INTERVAL 1 HOUR"))))
+    assert(step("late batch") === n1)
+    assert(Versioned.read(spark, silver).where(col("event_type") === "late").isEmpty)
+    val beforeRelanding = Versioned.currentVersion(silver).get
+
+    // the same batch id landed again: new file names, new rows
+    land("b2", events.where(col("event_id") % 3 === 2)
+      .withColumn("ingestion_timestamp", current_timestamp()))
+    assert(step("re-landed batch id") === total)
+
+    // rollback restores the older list, so the re-landed files are read again
+    Versioned.rollback(silver, beforeRelanding)
+    Versioned.rollback(reference, Versioned.currentVersion(reference).get - 1)
+    assert(Versioned.read(spark, silver).count() === n1)
+    assert(step("rerun after rollback") === total)
+
+    // a live snapshot without a list (compaction commits none): full read
+    Versioned.compact(spark, silver)
+    Versioned.compact(spark, reference)
+    assert(consumed.isEmpty)
+    land("b3", events.where(col("event_id") % 7 === 0)
+      .withColumn("event_type", lit("b3"))
+      .withColumn("ingestion_timestamp", current_timestamp()))
+    assert(step("live snapshot without a list") === total)
+    assert(consumed.map(_.size) === Some(csvFiles))
+
+    // a hand-written batch whose own inference is narrower than silver:
+    // integral values (INT where silver has DOUBLE) and all-empty columns
+    // (STRING on their own; an INT column would widen to BIGINT)
+    val schema = Versioned.read(spark, silver).schema
+    val at = java.time.Instant.now().plusSeconds(1)
+      .truncatedTo(java.time.temporal.ChronoUnit.MILLIS)
+    val hand = Paths.get(s"$bronze/events/batch_id=hand/part-00000.csv")
+    Files.createDirectories(hand.getParent)
+    Files.write(hand, (Seq(events.columns.mkString(",") + ",ingestion_timestamp") ++
+      Seq(1, 2, 3).map(k => s"$k,2024-01-02T03:04:05.000,,hand,$k,,$at")).asJava)
+    assert(step("narrower batch") === total)
+    assert(Versioned.read(spark, silver).schema === schema, "silver's schema must not change")
+    assert(Versioned.read(spark, silver).where(col("event_type") === "hand")
+      .select(col("value")).collect().map(_.getDouble(0)).sorted.toSeq === Seq(1.0, 2.0, 3.0))
+
+    // a rerun with no new bronze file returns the count and commits nothing
+    val live = Versioned.currentVersion(silver)
+    assert(Medallion.bronzeToSilver(spark, bronze, silver) === total)
+    assert(Versioned.currentVersion(silver) === live)
   }
 
   test("fanout: identical data in parquet/orc/avro, partitioned") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.v2.VersionedCatalog
@@ -18,6 +19,17 @@ import graft.sources.v2.VersionedCatalog
   * Iceberg's preserve-data-grouping.
   */
 class StoragePartitionedJoinSpec extends AnyFunSuite {
+  private val Spj = "spark.sql.sources.v2.bucketing.enabled"
+
+  /** Every test leaves the shared session's SPJ flag as it found it (Spark
+    * 4.1 defaults it ON), so later suites never inherit this one's last
+    * setting. */
+  override def withFixture(test: NoArgTest): Outcome = {
+    val prior = spark.conf.getOption(Spj)
+    try super.withFixture(test)
+    finally prior.fold(spark.conf.unset(Spj))(spark.conf.set(Spj, _))
+  }
+
   private lazy val spark = {
     val s = TestSpark.spark
     s.conf.set("spark.sql.catalog.gspj", classOf[VersionedCatalog].getName)
@@ -87,7 +99,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
       assert(shuffles(joined) === 0,
         s"SPJ must elide every exchange:\n${joined.queryExecution.executedPlan}")
     } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE gspj.ns.fact_a")
@@ -99,6 +110,7 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     writeFacts("gspj.ns.fact_c", 0)
     writeFacts("gspj.ns.fact_d", 3)
     val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set(Spj, "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       def run(): (Map[String, Long], Int) = {
@@ -115,7 +127,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
       assert(onShuffles === 0)
       assert(onRows === offRows, "SPJ must not change results")
     } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
       spark.sql("DROP TABLE gspj.ns.fact_c")
       spark.sql("DROP TABLE gspj.ns.fact_d")
@@ -146,7 +157,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
       assert(shuffles(joined) === 0,
         s"bucket SPJ must elide the join exchanges:\n${joined.queryExecution.executedPlan}")
     } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE gspj.ns.bk_a")
@@ -172,7 +182,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
       val rows = joined.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(rows === Map("r2" -> (500L * 500L)))
     } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
       spark.sql("DROP TABLE gspj.ns.fact_rf")
       spark.sql("DROP TABLE gspj.ns.dim_rf")
@@ -210,7 +219,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
       assert(joined.collect()(0).getLong(0) === 400L,
         "every plain-side row must land in its key's bucket")
     } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       spark.conf.unset("spark.sql.sources.v2.bucketing.shuffle.enabled")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
@@ -266,7 +274,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
         case Some(x) => spark.conf.set(c, x)
         case None => spark.conf.unset(c)
       } }
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       spark.sql("DROP TABLE gspj.ns.asym_a")
       spark.sql("DROP TABLE gspj.ns.asym_b")
     }
@@ -309,7 +316,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
         case Some(x) => spark.conf.set(c, x)
         case None => spark.conf.unset(c)
       } }
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       spark.sql("DROP TABLE gspj.ns.day_a")
       spark.sql("DROP TABLE gspj.ns.day_b")
     }
@@ -349,7 +355,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
         case Some(x) => spark.conf.set(c, x)
         case None => spark.conf.unset(c)
       } }
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       spark.sql("DROP TABLE gspj.ns.mon_a")
       spark.sql("DROP TABLE gspj.ns.mon_b")
     }
@@ -389,7 +394,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
         case Some(x) => spark.conf.set(c, x)
         case None => spark.conf.unset(c)
       } }
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       spark.sql("DROP TABLE gspj.ns.yr_a")
       spark.sql("DROP TABLE gspj.ns.yr_b")
     }
@@ -442,7 +446,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
         case Some(x) => spark.conf.set(c, x)
         case None => spark.conf.unset(c)
       } }
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       for (t <- Seq("gspj.ns.tr_a", "gspj.ns.tr_b", "gspj.ns.tri_a", "gspj.ns.tri_b"))
         spark.sql(s"DROP TABLE $t")
     }
@@ -481,7 +484,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
         assert(spark.table(t).count() === 2)
       }
     } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       spark.sql("DROP TABLE gspj.ns.mon_tz")
       spark.sql("DROP TABLE gspj.ns.mon_null")
     }
@@ -502,7 +504,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
       assert(spark.table("gspj.ns.day_n").where($"ts".isNull)
         .select($"k").as[Long].collect().toSeq === Seq(2L))
     } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       spark.sql("DROP TABLE gspj.ns.day_n")
     }
   }
@@ -530,7 +531,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
       }.sum
       assert(scanned > 0 && scanned < all)
     } finally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
       spark.sql("DROP TABLE gspj.ns.fact_e")
     }
   }

@@ -50,6 +50,52 @@ class TableFormatSpec extends AnyFunSuite {
     assert(Versioned.read(spark, root).collect().map(_.getLong(0)).toSeq === Seq(9L))
   }
 
+  test("versioned sidecars: published, rolled back and aged out with their snapshot") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("vsidecar").toString + "/t"
+    val rows = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    val more = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
+
+    val v1 = Versioned.commit(rows, root, sidecars = Map("consumed" -> "f1"))
+    val v2 = Versioned.commit(more, root, sidecars = Map("consumed" -> "f1\nf2"))
+    // visible only through the version that carries it
+    assert(Versioned.sidecar(root, v1, "consumed") === Some("f1"))
+    assert(Versioned.sidecar(root, v2, "consumed") === Some("f1\nf2"))
+    assert(Versioned.sidecar(root, v2, "other") === None)
+    // data reads and the snapshot log never see it
+    assert(Versioned.read(spark, root).count() === 3)
+    assert(Versioned.readVersion(spark, root, v1).columns.toSeq === Seq("k", "v"))
+    assert(Versioned.readVersion(spark, root, v1).count() === 2)
+    assert(Versioned.history(spark, root).count() === 2)
+    // names that data readers would not skip are refused
+    Seq("SUCCESS", "metadata", "x=1", "").foreach { n =>
+      intercept[IllegalArgumentException](Versioned.commit(rows, root, sidecars = Map(n -> "")))
+    }
+
+    // rollback moves the live list with the live snapshot
+    Versioned.rollback(root, v1)
+    assert(Versioned.sidecar(root, Versioned.currentVersion(root).get, "consumed") === Some("f1"))
+
+    // a writer failing after its data write, before the flip: the sidecar
+    // path is taken by a directory planted from inside the write job
+    val next = Versioned.versions(root).max + 1
+    val blocker = s"$root/v=$next/_consumed/blocker"
+    val plant = udf { (k: Long) => new java.io.File(blocker).mkdirs(); k }
+    intercept[Exception](Versioned.commit(
+      spark.range(1, 4).select(plant(col("id")).as("k"), lit("x").as("v")), root,
+      sidecars = Map("consumed" -> "f1\nf2\nf3")))
+    assert(Files.exists(Paths.get(blocker)), "the data write ran")
+    assert(Versioned.currentVersion(root) === Some(v1))
+    assert(Versioned.sidecar(root, v1, "consumed") === Some("f1"))
+    assert(Versioned.read(spark, root).count() === 2)
+
+    // retention GC removes each list with its v=N directory
+    val v4 = Versioned.commit(more, root, sidecars = Map("consumed" -> "f4"))
+    assert(v4 > next && Versioned.sidecar(root, v4, "consumed") === Some("f4"))
+    assert(!Versioned.versions(root).contains(v1) && Versioned.sidecar(root, v1, "consumed") === None)
+    assert(!Files.exists(Paths.get(s"$root/v=$v1")))
+  }
+
   test("compaction: packs fragmented files into a new snapshot, data identical") {
     import spark.implicits._
     val root = Files.createTempDirectory("vcompact").toString + "/t"
