@@ -19,9 +19,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction(GraftExtensions.rollingHash)
     e.injectFunction(GraftExtensions.floatCosine)
     e.injectFunction(GraftExtensions.shingleRows)
-    // `spark.sql("MERGE INTO …")` for non-v2 tables, plus `VERSION AS OF`
-    // / `TIMESTAMP AS OF` over registered Versioned tables (plans.MergeInto,
-    // plans.TimeTravel — both rewrites live in GraftSqlParser.lower)
+    // `spark.sql("MERGE INTO …")`, UPDATE and DELETE lowered to graft
+    // commands, plus catalog VIEW DDL (GraftSqlParser.lower); `VERSION AS
+    // OF` / `TIMESTAMP AS OF` stay Spark's own, answered by the catalog
     e.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))
     // catalog VIEW resolution for the NON-SQL read paths (`spark.table`):
     // SQL text expands views at the parser seam, but a programmatic read

@@ -48,11 +48,11 @@ object Medallion {
     * is at or below today's watermark and the strict filter drops it
     * anyway. A rollback restores the older list with the older watermark,
     * so the files consumed since are read again. With no live snapshot,
-    * no list (older code, [[Versioned.compact]], a published branch) or a
-    * NULL watermark, `consumed` is empty: one code path, no switch. The
-    * staging columns are typed as the full re-read would type them
-    * ([[Formats.readCsv]] continues inference from silver's schema). A
-    * run that finds no new bronze file commits nothing.
+    * no list (older code, [[Versioned.compact]]) or a NULL watermark,
+    * `consumed` is empty: one code path, no switch. The staging columns
+    * are typed as the full re-read would type them ([[Formats.readCsv]]
+    * continues inference from silver's schema). A run that finds no new
+    * bronze file commits nothing.
     *
     * The MERGE result is committed through [[Versioned]] — immutable
     * snapshot dir + atomic pointer flip — the object-store-safe stand-in

@@ -13,7 +13,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.sources.{ManifestTable, Versioned}
+import graft.sources.ManifestTable
 
 /** Engine-native `MERGE INTO` SQL — the reference's central silver-layer
   * statement (`/root/reference/dags/2_bronze_to_silver.py:266-293`), which
@@ -36,11 +36,12 @@ import graft.sources.{ManifestTable, Versioned}
   *    NOT MATCHED INSERT (incl. star form), NOT MATCHED BY SOURCE
   *    UPDATE/DELETE, each with an optional AND condition. This is the
   *    same lowering Iceberg's own copy-on-write MERGE performs.
-  *  - Write-back commits through [[Versioned]] when the target is a
-  *    registered versioned table (ACID snapshot + retained history — the
-  *    full Iceberg semantics: reading v=N while writing v=N+1 means no
-  *    read-write conflict and crash safety), or overwrites a catalog
-  *    table after an eager localCheckpoint (self-overwrite barrier).
+  *  - Write-back commits a new manifest when the target is a
+  *    [[graft.sources.v2.VersionedCatalog]] table (`cat.ns.tbl`: ACID
+  *    snapshot + retained history — reading v=N while writing v=N+1 means
+  *    no read-write conflict and crash safety; its own log answers
+  *    `VERSION AS OF`), or overwrites a session-catalog table after an
+  *    eager localCheckpoint (self-overwrite barrier).
   *
   * Scale notes (100 TB): the whole statement is one equi-joinable shuffle
   * (Catalyst extracts equi-keys from the ON condition; the smaller side —
@@ -72,56 +73,26 @@ object MergeInto {
   private val ACT  = "__graft_act"   // MOR merge row action: u/d/i
   private val PRE  = "__graft_pre_"  // classified-merge pre-image column prefix
 
-  /** How a registered DML target stores its snapshots. */
-  private[plans] sealed trait Backing
-  private[plans] case class VersionedBacking(root: String) extends Backing
-  private[plans] case class ManifestBacking(root: String, dayOf: Option[String]) extends Backing
   /** A `cat.ns.tbl` identifier of a [[graft.sources.v2.VersionedCatalog]]:
     * commits go through the manifest and readers resolve the pointer via
-    * the catalog — no temp view to refresh. */
-  private[plans] case class CatalogBacking(root: String, dayOf: Option[String]) extends Backing
-
-  /** Registered snapshot-table DML targets: lowercase name -> backing. */
-  private val registered = new ConcurrentHashMap[String, Backing]()
-
-  /** Registry lookup (used by [[TimeTravel]]). */
-  private[plans] def backingFor(name: String): Option[Backing] =
-    Option(registered.get(name.toLowerCase))
-
-  /** Register a [[Versioned]] table root under a SQL-addressable name:
-    * creates/refreshes a temp view over the live snapshot and makes the
-    * name a valid MERGE INTO target (commits flow through
-    * [[Versioned.commit]]). */
-  def registerVersioned(spark: SparkSession, name: String, root: String): Unit = {
-    require(Versioned.exists(root), s"no committed snapshot under $root")
-    registered.put(name.toLowerCase, VersionedBacking(root))
-    Versioned.read(spark, root).createOrReplaceTempView(name)
-  }
-
-  /** Register a [[ManifestTable]] root. With `partitionDayOf` set (the
-    * timestamp column the hidden day partition derives from), MERGE
-    * statements rewrite ONLY the touched day partitions — files of every
-    * other day carry into the new manifest untouched. */
-  def registerManifest(spark: SparkSession, name: String, root: String,
-                       partitionDayOf: Option[String] = None): Unit = {
-    require(ManifestTable.exists(root), s"no committed manifest under $root")
-    registered.put(name.toLowerCase, ManifestBacking(root, partitionDayOf))
-    ManifestTable.read(spark, root).createOrReplaceTempView(name)
-  }
+    * the catalog — no temp view to refresh. With `dayOf` set (the
+    * timestamp column the hidden day partition derives from), MERGE and
+    * DELETE rewrite ONLY the touched day partitions. */
+  private case class CatalogBacking(root: String, dayOf: Option[String])
 
   /** Run one SQL statement with MERGE INTO support, independent of how the
     * session was built (parses with the session's own parser, so every
     * non-MERGE statement behaves exactly like `spark.sql`). */
   def sql(spark: SparkSession, sqlText: String): DataFrame =
     // ofRows on the lowered plan == spark.sql for untouched statements,
-    // and carries the DML commands / time-travel rewrites when present
+    // and carries the DML and view commands when present
     GraftColumnBridge.ofRows(spark,
       GraftSqlParser.lower(spark.sessionState.sqlParser.parsePlan(sqlText)))
 
   /** Resolved DML target: the table's current contents plus how to commit
     * a rewritten copy of it. */
   private case class Target(name: String, alias: String,
-                            backing: Option[Backing], df: DataFrame)
+                            backing: Option[CatalogBacking], df: DataFrame)
 
   /** A MERGE condition's top-level conjuncts, classified for the scale
     * paths: `equi` — `target.col = source.col` attribute pairs (resolved
@@ -240,20 +211,13 @@ object MergeInto {
       case other => throw new IllegalArgumentException(
         s"DML target must be a table name, got ${other.nodeName}")
     }
-    val backing = backingFor(name).orElse(catalogBackingFor(spark, name))
-    val df = backing match {
-      case Some(VersionedBacking(r))      => Versioned.read(spark, r)
-      case Some(ManifestBacking(r, _))    => ManifestTable.read(spark, r)
-      // through the catalog, not raw parquet: the V2 relation reads with
-      // the DECLARED schema, so files predating an ADD COLUMN null-fill
-      // instead of being footer-sampled into the wrong shape
-      case Some(CatalogBacking(_, _))     => spark.table(name)
-      case None =>
-        require(spark.catalog.tableExists(name),
-          s"DML target $name is neither a catalog table nor a registered snapshot table")
-        spark.table(name)
-    }
-    Target(name, targetAlias.getOrElse(name.split('.').last), backing, df)
+    val backing = catalogBackingFor(spark, name)
+    if (backing.isEmpty)
+      require(spark.catalog.tableExists(name), s"DML target $name is not a table")
+    // through the catalog, not raw parquet: the V2 relation reads with
+    // the DECLARED schema, so files predating an ADD COLUMN null-fill
+    // instead of being footer-sampled into the wrong shape
+    Target(name, targetAlias.getOrElse(name.split('.').last), backing, spark.table(name))
   }
 
   /** Resolve a 3-part `cat.ns.tbl` name against a configured
@@ -262,7 +226,7 @@ object MergeInto {
     * instantiation. Makes catalog identifiers first-class MERGE/UPDATE/
     * DELETE targets (the reference's `silver_catalog.silver.<tbl>` MERGE
     * shape) with no temp-view registration step. */
-  private def catalogBackingFor(spark: SparkSession, name: String): Option[Backing] = {
+  private def catalogBackingFor(spark: SparkSession, name: String): Option[CatalogBacking] = {
     val parts = name.split('.')
     if (parts.length != 3) return None
     val isVersioned = spark.conf.getOption(s"spark.sql.catalog.${parts(0)}")
@@ -282,8 +246,7 @@ object MergeInto {
 
   /** Catalog tables store renamed columns under their original PHYSICAL
     * names; a rewrite computed in logical names maps back before commit.
-    * Identity for tables without renames (and for bare manifest roots,
-    * which have no `_TABLE` descriptor). */
+    * Identity for tables without renames. */
   private def toPhysical(root: String, df: DataFrame): DataFrame =
     graft.sources.v2.VersionedCatalog.readMeta(root) match {
       case Some(m) if m.renames.nonEmpty =>
@@ -297,23 +260,16 @@ object MergeInto {
 
   private def writeBack(spark: SparkSession, tgt: Target, result: DataFrame): Unit =
     tgt.backing match {
-      case Some(VersionedBacking(r)) =>
-        Versioned.commit(result, r, retain = retainOf(spark, r))
-        Versioned.read(spark, r).createOrReplaceTempView(tgt.name) // refresh the view
-      case Some(ManifestBacking(r, dayOf)) =>
-        // carry live props: a full rewrite continues the table's history,
-        // and dropping the stream.<appId>.batch marker would let a replayed
-        // foreachBatch double-append after a MERGE
-        ManifestTable.commit(result, r, retain = retainOf(spark, r), partitionDayOf = dayOf,
-          props = ManifestTable.liveProps(r))
-        ManifestTable.read(spark, r).createOrReplaceTempView(tgt.name)
       case Some(CatalogBacking(r, _)) =>
         // readers resolve the manifest pointer through the catalog on
         // every analysis — nothing to refresh; data files carry PHYSICAL
         // names, the table's declared format, and whatever partition
         // layout the descriptor declares (day / hidden transform /
         // identity columns — a flat rewrite of a partitioned pool would
-        // corrupt partition discovery for every reader)
+        // corrupt partition discovery for every reader). Live props carry
+        // over: a full rewrite continues the table's history, and dropping
+        // the stream.<appId>.batch marker would let a replayed foreachBatch
+        // double-append after a MERGE
         graft.sources.v2.VersionedCatalog.commitPreservingLayout(
           r, toPhysical(r,
             graft.sources.v2.VersionedCatalog.withChecks(result, r, tgt.name)),
@@ -343,7 +299,7 @@ object MergeInto {
   }
 
   /** Execute an already-parsed MERGE: resolve the target, compute the
-    * merged relation, write it back. Day-partitioned manifest targets take
+    * merged relation, write it back. Day-partitioned catalog targets take
     * the partition-scoped path when the statement allows it. */
   private[graft] def execute(spark: SparkSession, m: MergeIntoTable): Unit = {
     requireDmlReadScope(spark)
@@ -389,17 +345,8 @@ object MergeInto {
       spark.conf.get("spark.graft.merge.partitionScoped", "true").toBoolean
     val scoped = tgt.backing match {
       // NOT MATCHED BY SOURCE touches every partition — full rewrite then
-      case Some(ManifestBacking(root, Some(ts))) if scopedEnabled =>
-        val (v0, raw) = ManifestTable.readRawPinned(spark, root)
-        executeScopedMerge(spark, tgt, root, ts, source, m, refreshView = true,
-          raw = raw, baseVersion = Some(v0))
       case Some(CatalogBacking(root, Some(ts))) if scopedEnabled =>
-        // derive __day from ts over the schema-pinned catalog read — the
-        // identical derivation the append used to lay the files out
-        val v0 = ManifestTable.currentVersion(root)
-        executeScopedMerge(spark, tgt, root, ts, source, m, refreshView = false,
-          raw = tgt.df.withColumn(ManifestTable.DayCol, to_date(col(ts))),
-          baseVersion = v0)
+        executeScopedMerge(spark, tgt, root, ts, source, m)
       // identity layouts (the gold `ano, mes` shape): rewrite only the
       // MATCHED keys' partitions through the key-replace commit
       case Some(CatalogBacking(root, None)) if scopedEnabled =>
@@ -423,20 +370,18 @@ object MergeInto {
     * for discovery — both prunable, both tiny output (distinct days). */
   private def executeScopedMerge(spark: SparkSession, tgt: Target, root: String,
                                  tsCol: String, source0: DataFrame,
-                                 m: MergeIntoTable, refreshView: Boolean,
-                                 raw: DataFrame,
-                                 baseVersion: Option[Long]): Boolean = {
+                                 m: MergeIntoTable): Boolean = {
+    val baseVersion = ManifestTable.currentVersion(root)
     // LIVE TOMBSTONES COMPOSE with the scoped rewrite (r19 — the former
     // one-tombstone-triggers-full-rewrite cliff): the probe and the
-    // rewrite both read deletes-APPLIED rows (readRawPinned /
-    // the catalog scan), so a rewritten day's new files materialize its
-    // tombstones away; carried days keep their artifacts live
-    // (positional ones name their targets, equality ones retract only
-    // strictly-older sequences — the rewritten files' fresh sequence
-    // escapes them by design). Artifacts whose targets all died go
-    // INERT, the same documented state a day-scoped OPTIMIZE leaves
-    // (fsck classifies them; rewrite_deletes drops them), and
-    // replaceScoped's delete-conflict check still catches a tombstone
+    // rewrite both read deletes-APPLIED rows (the catalog scan), so a
+    // rewritten day's new files materialize its tombstones away; carried
+    // days keep their artifacts live (positional ones name their targets,
+    // equality ones retract only strictly-older sequences — the rewritten
+    // files' fresh sequence escapes them by design). Artifacts whose
+    // targets all died go INERT, the same documented state a day-scoped
+    // OPTIMIZE leaves (fsck classifies them; rewrite_deletes drops them),
+    // and replaceScoped's delete-conflict check still catches a tombstone
     // landing between this read and the commit.
     // after a partition spec evolution old files live in other layouts:
     // a "day" no longer names a carryable file set — full rewrite only
@@ -451,6 +396,9 @@ object MergeInto {
       .exists(_.dataType == org.apache.spark.sql.types.TimestampType)
     if (zoneSensitive && !ManifestTable.liveProps(root).get(ManifestTable.ZoneProp)
         .contains(spark.sessionState.conf.sessionLocalTimeZone)) return false
+    // derive __day from ts over the schema-pinned catalog read — the
+    // identical derivation the append used to lay the files out
+    val raw = tgt.df.withColumn(ManifestTable.DayCol, to_date(col(tsCol)))
     val targetCols = tgt.df.columns.toSeq
     // the discovery joins and the merge itself must see the SAME source
     // rows — pin before the first consumption ([[pinSource]])
@@ -507,24 +455,22 @@ object MergeInto {
     scala.util.Try(recordMergeScan(spark, root, daysDf))
     if (days.isEmpty) return true // nothing matched, nothing inserts: no-op
 
-    // the REWRITE read: day-restricted. The hidden-day column prunes at
-    // the dir level for manifest-backed reads; a catalog read derives
-    // __day from the ts column, so the day filter alone is not pushable
-    // — a typed ts-range predicate over the same day set (exactly
+    // the REWRITE read: day-restricted. The catalog read derives __day
+    // from the ts column, so the day filter alone is not pushable — a
+    // typed ts-range predicate over the same day set (exactly
     // equivalent: a row's __day is its ts's date in the recorded
     // timeline, and the ranges are built in that same timeline) reaches
     // the manifest pruning and keeps the rewrite's input proportional to
     // the touched days at any table size.
     val restricted0 = raw
       .where(col(ManifestTable.DayCol).cast("string").isin(days.toSeq: _*))
-    val restricted = (if (refreshView) restricted0
-      else tsDayRangePred(spark, tgt.df.schema, tsCol, days)
-        .map(restricted0.where).getOrElse(restricted0)) // conjunct: the day
+    val restricted = tsDayRangePred(spark, tgt.df.schema, tsCol, days)
+      .map(restricted0.where).getOrElse(restricted0) // conjunct: the day
       // filter stays authoritative, the range predicate only PRUNES
       .drop(ManifestTable.DayCol)
     def checked(d: DataFrame): DataFrame =
       graft.sources.v2.VersionedCatalog.withChecks(d, root, tgt.name)
-    // CHANGE-PRESERVING rewrite (`changefeed.cow=true`, catalog targets):
+    // CHANGE-PRESERVING rewrite (`changefeed.cow=true`):
     // classify every row of the touched days by the clause that fired,
     // land each class as op-labeled files (update/carry/insert), publish
     // the update/delete PRE-IMAGES as CDC sidecars, and stamp the
@@ -532,7 +478,7 @@ object MergeInto {
     // exact per-row events whose volume follows the TOUCHED rows
     // (Delta's CDC contract), instead of a feed break or a partition-
     // sized flood of phantom update pairs.
-    if (!refreshView && graft.sources.v2.VersionedCatalog.changefeedCowFor(root)) {
+    if (graft.sources.v2.VersionedCatalog.changefeedCowFor(root)) {
       val classified = mergeClassified(restricted, tgt.alias, source, m)
         .localCheckpoint(true)
       val actCounts: Map[String, Long] = classified.groupBy(col(ACT))
@@ -561,8 +507,6 @@ object MergeInto {
         partitionDayOf = physicalNameOf(root, tsCol), retain = retainOf(spark, root),
         expectedVersion = baseVersion)
     }
-    if (refreshView)
-      ManifestTable.read(spark, root).createOrReplaceTempView(tgt.name)
     true
   }
 
@@ -722,7 +666,7 @@ object MergeInto {
   }
 
   /** `DELETE FROM t [WHERE …]`: map-only — keep rows where the condition
-    * is false or null. Day-partitioned snapshot targets take the
+    * is false or null. Day-partitioned catalog targets take the
     * retention fast path first ([[tryDayScopedDelete]]): whole days
     * covered by a ts-range condition are dropped from the MANIFEST with
     * no data read or written, and only a boundary day that the range
@@ -749,14 +693,8 @@ object MergeInto {
     def fastEnabled: Boolean =
       spark.conf.get("spark.graft.delete.dayScoped", "true").toBoolean
     val fast = tgt.backing match {
-      case Some(ManifestBacking(root, Some(ts))) if fastEnabled =>
-        val (v0, raw) = ManifestTable.readRawPinned(spark, root)
-        tryDayScopedDelete(spark, tgt, root, ts, d.condition,
-          raw = raw, refreshView = true, baseVersion = Some(v0))
       case Some(CatalogBacking(root, Some(ts))) if fastEnabled =>
-        tryDayScopedDelete(spark, tgt, root, ts, d.condition,
-          raw = tgt.df.withColumn(ManifestTable.DayCol, to_date(col(ts))),
-          refreshView = false, baseVersion = ManifestTable.currentVersion(root))
+        tryDayScopedDelete(spark, tgt, root, ts, d.condition)
       case _ => false
     }
     if (!fast) {
@@ -1514,10 +1452,9 @@ object MergeInto {
     * days. Returns false when the condition isn't a pure ts-range (the
     * caller falls back to the full rewrite). */
   private def tryDayScopedDelete(spark: SparkSession, tgt: Target, root: String,
-                                 tsCol: String, cond: Expression,
-                                 raw: DataFrame, refreshView: Boolean,
-                                 baseVersion: Option[Long]): Boolean = {
+                                 tsCol: String, cond: Expression): Boolean = {
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    val baseVersion = ManifestTable.currentVersion(root)
     // with live tombstones the boundary-day rewrite path reads raw
     // day-filtered data whose deletes must be re-applied — decline and
     // let the full rewrite (which reads delete-applied) materialize them
@@ -1567,7 +1504,7 @@ object MergeInto {
     if (fully.isEmpty && partial.isEmpty) return true // no-op delete
     if (partial.isEmpty && fully == days) return false // would empty: rewrite path
     // rewriting a boundary day re-derives __day via to_date(ts) in THIS
-    // session (both the CatalogBacking raw and the pool write do) — only
+    // session (both the boundary-day read and the pool write do) — only
     // sound when this session's zone IS the writer zone. The drop-only
     // branch touches no data and needs only the boundary math above.
     if (partial.nonEmpty && tsType == TimestampType &&
@@ -1578,17 +1515,14 @@ object MergeInto {
       ManifestTable.dropDays(root, fully, retain = retain,
         expectedVersion = baseVersion) // pure metadata
     } else {
-      val restricted = raw
-        .where(col(ManifestTable.DayCol).cast("string").isin(partial.toSeq: _*))
-        .drop(ManifestTable.DayCol)
+      val restricted = tgt.df
+        .where(to_date(col(tsCol)).cast("string").isin(partial.toSeq: _*))
         .alias(tgt.alias)
       val hit = coalesce(GraftColumnBridge.column(cond), lit(false))
       ManifestTable.replaceDays(toPhysical(root, restricted.where(!hit)), root,
         removeDays = fully ++ partial, partitionDayOf = physicalNameOf(root, tsCol),
         retain = retain, expectedVersion = baseVersion)
     }
-    if (refreshView)
-      ManifestTable.read(spark, root).createOrReplaceTempView(tgt.name)
     true
   }
 
@@ -1827,7 +1761,7 @@ object MergeInto {
   }
 
   /** Driver-contract query: a full MERGE INTO lifecycle, SQL-first.
-    * Target = a Versioned table of customers missing every third key;
+    * Target = a catalog table of customers missing every third key;
     * staging = per-customer order aggregates. One statement exercises all
     * four clause kinds: conditional UPDATE (big spenders get their order
     * count added to the balance), conditional DELETE (remaining MACHINERY
@@ -1837,15 +1771,14 @@ object MergeInto {
   def mergeIntoSql(spark: SparkSession, dir: String): DataFrame = {
     // unique names: Verify runs queries concurrently on one session
     val id = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_msql_$id"
-    val tName = s"msql_t_$id"
+    graft.sources.v2.V2Queries.ensureCatalog(spark)
+    val tName = s"${graft.sources.v2.V2Queries.Cat}.q.msql_t_$id"
     val sName = s"msql_s_$id"
     try {
-      val target0 = graft.Tables.customer(spark, dir)
+      graft.Tables.customer(spark, dir)
         .where(col("c_custkey") % 3 =!= 0)
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
-      Versioned.commit(target0, root)
-      registerVersioned(spark, tName, root)
+        .writeTo(tName).create()
       graft.Tables.orders(spark, dir)
         .groupBy(col("o_custkey").as("custkey"))
         .agg(count(lit(1)).as("n_orders"),
@@ -1863,14 +1796,12 @@ object MergeInto {
            |       VALUES (s.custkey, CAST(s.n_orders AS DOUBLE), 'NEW')
            |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET c_mktsegment = 'DORMANT'
            |""".stripMargin)
-      // materialize the committed snapshot so the finally can reclaim the
-      // tmp root and registrations (Verify/Bench loops stay disk-flat)
-      Versioned.read(spark, root).localCheckpoint(true)
+      // materialize the committed snapshot so the finally can drop the
+      // table (Verify/Bench loops stay disk-flat)
+      spark.table(tName).localCheckpoint(true)
     } finally {
-      registered.remove(tName.toLowerCase)
-      spark.catalog.dropTempView(tName)
+      spark.sql(s"DROP TABLE IF EXISTS $tName")
       spark.catalog.dropTempView(sName)
-      graft.sources.MetaIO.delete(root, recursive = true)
     }
   }
 
@@ -1931,15 +1862,16 @@ case class GraftDeleteCommand(delete: DeleteFromTable) extends LeafRunnableComma
 }
 
 object GraftSqlParser {
-  /** Lower the three row-level DML plans to graft commands, rewrite
-    * time-travel reads of registered Versioned tables, expand catalog
-    * VIEW references ([[Views.expand]]), and route CREATE/DROP VIEW on
-    * versioned-catalog names to graft's view store; anything else passes
-    * through. TimeTravel runs first so `VERSION AS OF` works inside a
-    * MERGE source too; view expansion runs before the DML match so a
-    * MERGE/UPDATE can read FROM a view. */
+  /** Lower the three row-level DML plans to graft commands, expand
+    * catalog VIEW references ([[Views.expand]]), and route CREATE/DROP
+    * VIEW on versioned-catalog names to graft's view store; anything else
+    * passes through. View expansion runs before the DML match so a
+    * MERGE/UPDATE can read FROM a view. Time travel (`VERSION AS OF` /
+    * `TIMESTAMP AS OF`, in a MERGE source too) is left to Spark's
+    * analyzer, which resolves it through the catalog's versioned
+    * `loadTable`. */
   def lower(plan: LogicalPlan): LogicalPlan =
-    Views.expand(TimeTravel.rewrite(plan)) match {
+    Views.expand(plan) match {
       case m: MergeIntoTable  => GraftMergeCommand(m)
       case u: UpdateTable     => GraftUpdateCommand(u)
       case d: DeleteFromTable => GraftDeleteCommand(d)

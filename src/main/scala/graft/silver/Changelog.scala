@@ -17,7 +17,7 @@ import graft.Tables
   *    history per key — from the same event stream the upsert consumes;
   *  - [[cdcApply]] materializes the final table state from a changelog with
   *    delete semantics, the consumer side of the CDC diff that
-  *    `sources/Versioned.snapshotDiff` produces.
+  *    `sources/Versioned.diff` produces.
   *
   * Scale shape (both): one shuffle on the entity key; all windows are
   * per-key, so reducer state is bounded by a single key's history, never

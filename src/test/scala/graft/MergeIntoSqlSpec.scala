@@ -7,18 +7,32 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.{GraftMergeCommand, GraftSqlParser, MergeInto}
 import graft.silver.Merge
-import graft.sources.Versioned
+import graft.sources.ManifestTable
+import graft.sources.v2.VersionedCatalog
 
 /** Engine-native MERGE INTO SQL (plans.MergeInto): parser lowering, all
   * four clause kinds, star forms (differential vs Merge.upsert), the
-  * multi-match guard, Versioned snapshot commits, and the
-  * SparkSessionExtensions end-to-end path. */
+  * multi-match guard, snapshot commits and time travel on versioned
+  * catalog tables, and the SparkSessionExtensions end-to-end path. */
 class MergeIntoSqlSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+  private lazy val wh: String = tmp("msq_wh")
+  private lazy val spark = {
+    val s = TestSpark.spark
+    s.conf.set("spark.sql.catalog.gmsq", classOf[VersionedCatalog].getName)
+    s.conf.set("spark.sql.catalog.gmsq.warehouse", wh)
+    s.sql("CREATE NAMESPACE IF NOT EXISTS gmsq.ns")
+    s
+  }
   import spark.implicits._
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** A fresh `gmsq.ns.<name>` table; returns its identifier and root. */
+  private def catalogTable(name: String): (String, String) = {
+    spark.sql(s"DROP TABLE IF EXISTS gmsq.ns.$name")
+    (s"gmsq.ns.$name", s"$wh/ns/$name")
+  }
 
   test("parser lowers MERGE INTO to GraftMergeCommand, delegates the rest") {
     val p = new GraftSqlParser(spark.sessionState.sqlParser)
@@ -170,23 +184,50 @@ class MergeIntoSqlSpec extends AnyFunSuite {
   }
 
   test("Versioned target: MERGE commits snapshots; history and time travel see both") {
-    val root = tmp("msq_versioned")
-    Versioned.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), root, retain = 5)
-    MergeInto.registerVersioned(spark, "msq_vt", root)
+    val (t, root) = catalogTable("vt")
+    Seq((1L, "a"), (2L, "b")).toDF("k", "s").writeTo(t)
+      .tableProperty("retain", "5").create()
+    assert(ManifestTable.versions(root) == Seq(1L))
     Seq((2L, "B"), (3L, "C")).toDF("k", "s").createOrReplaceTempView("msq_vstg")
     MergeInto.sql(spark,
-      """MERGE INTO msq_vt t USING msq_vstg s ON t.k = s.k
-        |WHEN MATCHED THEN UPDATE SET *
-        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    assert(Versioned.versions(root) == Seq(1L, 2L))
-    // the registered view now serves the post-merge snapshot
-    assert(spark.table("msq_vt").as[(Long, String)].collect().toMap ==
+      s"""MERGE INTO $t t USING msq_vstg s ON t.k = s.k
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    // one MERGE, one snapshot
+    assert(ManifestTable.versions(root) == Seq(1L, 2L))
+    assert(ManifestTable.history(spark, root).count() == 2L)
+    // the catalog serves the post-merge snapshot
+    assert(spark.table(t).as[(Long, String)].collect().toMap ==
       Map(1L -> "a", 2L -> "B", 3L -> "C"))
     // time travel still reads the pre-merge snapshot
-    assert(Versioned.readVersion(spark, root, 1L).as[(Long, String)].collect().toMap ==
-      Map(1L -> "a", 2L -> "b"))
-    // and SQL over the view composes with the rest of the session
-    assert(spark.sql("SELECT count(*) FROM msq_vt WHERE s = 'C'").head().getLong(0) == 1L)
+    assert(spark.sql(s"SELECT k, s FROM $t VERSION AS OF 1").as[(Long, String)]
+      .collect().toMap == Map(1L -> "a", 2L -> "b"))
+    // and SQL over the table composes with the rest of the session
+    assert(spark.sql(s"SELECT count(*) FROM $t WHERE s = 'C'").head().getLong(0) == 1L)
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("MERGE source pinned with VERSION AS OF merges that snapshot's rows, not the live ones") {
+    val (src, _) = catalogTable("pin_src")
+    val (t, _) = catalogTable("pin_t")
+    Seq((1L, "v1"), (2L, "v1")).toDF("k", "s").writeTo(src)
+      .tableProperty("retain", "5").create()                           // src v1
+    MergeInto.sql(spark, s"UPDATE $src SET s = 'v2'")                  // src v2
+    Seq((3L, "v2")).toDF("k", "s").writeTo(src).append()               // src v3
+    Seq((1L, "t")).toDF("k", "s").writeTo(t).create()
+    // Spark's grammar takes a table name or a parenthesized query after
+    // USING, so the pinned read is a subquery
+    MergeInto.sql(spark,
+      s"""MERGE INTO $t t USING (SELECT * FROM $src VERSION AS OF 1) s ON t.k = s.k
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    assert(spark.table(t).as[(Long, String)].collect().toMap ==
+      Map(1L -> "v1", 2L -> "v1"))
+    // the live source is untouched by the pin
+    assert(spark.table(src).as[(Long, String)].collect().toMap ==
+      Map(1L -> "v2", 2L -> "v2", 3L -> "v2"))
+    spark.sql(s"DROP TABLE $t")
+    spark.sql(s"DROP TABLE $src")
   }
 
   test("withExtensions session: plain spark.sql(MERGE INTO) works") {
@@ -261,27 +302,31 @@ class MergeIntoSqlSpec extends AnyFunSuite {
     try {
       val ext = SparkSession.builder().master("local[4]")
         .withExtensions(new GraftExtensions).getOrCreate()
-      val root = tmp("msq_tt")
-      Versioned.commit(ext.createDataFrame(Seq((1L, "a"), (2L, "b"))).toDF("k", "s"), root, retain = 5)
-      MergeInto.registerVersioned(ext, "msq_tt", root)
+      ext.conf.set("spark.sql.catalog.gtt", classOf[VersionedCatalog].getName)
+      ext.conf.set("spark.sql.catalog.gtt.warehouse", tmp("msq_ttwh"))
+      ext.sql("CREATE NAMESPACE IF NOT EXISTS gtt.ns")
+      ext.createDataFrame(Seq((1L, "a"), (2L, "b"))).toDF("k", "s")
+        .writeTo("gtt.ns.tt").tableProperty("retain", "5").create()
       ext.createDataFrame(Seq((2L, "B2"))).toDF("k", "s").createOrReplaceTempView("msq_tt_stg")
       ext.sql(
-        """MERGE INTO msq_tt t USING msq_tt_stg s ON t.k = s.k
+        """MERGE INTO gtt.ns.tt t USING msq_tt_stg s ON t.k = s.k
           |WHEN MATCHED THEN UPDATE SET *""".stripMargin)
-      // live view sees v2; VERSION AS OF pins v1
-      assert(ext.sql("SELECT s FROM msq_tt WHERE k = 2").head().getString(0) == "B2")
-      assert(ext.sql("SELECT s FROM msq_tt VERSION AS OF 1 WHERE k = 2").head().getString(0) == "b")
+      // live reads see v2; VERSION AS OF pins v1
+      assert(ext.sql("SELECT s FROM gtt.ns.tt WHERE k = 2").head().getString(0) == "B2")
+      assert(ext.sql("SELECT s FROM gtt.ns.tt VERSION AS OF 1 WHERE k = 2")
+        .head().getString(0) == "b")
       // TIMESTAMP AS OF far in the future resolves to the latest snapshot
-      assert(ext.sql("SELECT s FROM msq_tt TIMESTAMP AS OF '2100-01-01' WHERE k = 2")
+      assert(ext.sql("SELECT s FROM gtt.ns.tt TIMESTAMP AS OF '2100-01-01' WHERE k = 2")
         .head().getString(0) == "B2")
       // before the first commit: no snapshot to serve
       val e = intercept[Exception](
-        ext.sql("SELECT * FROM msq_tt TIMESTAMP AS OF '2000-01-01'").collect())
+        ext.sql("SELECT * FROM gtt.ns.tt TIMESTAMP AS OF '2000-01-01'").collect())
       assert(e.getMessage.contains("no retained snapshot"))
-      // unregistered tables fall through to Spark's own error, not ours
+      // non-catalog relations get Spark's own error, not ours
       val e2 = intercept[Exception](
         ext.sql("SELECT * FROM range(1) VERSION AS OF 1").collect())
       assert(!e2.getMessage.contains("retained snapshot"))
+      ext.sql("DROP TABLE gtt.ns.tt")
     } finally {
       SparkSession.setDefaultSession(old)
       SparkSession.setActiveSession(old)
@@ -298,17 +343,15 @@ class MergeIntoSqlSpec extends AnyFunSuite {
     MergeInto.sql(spark, "DELETE FROM msq_dml WHERE v > 50")
     assert(spark.table("msq_dml").as[(Long, Double)].collect().toMap ==
       Map(1L -> 10.0, 2L -> 40.0))
-    // versioned table: each statement is one snapshot commit
-    val root = tmp("msq_dml_v")
-    Versioned.commit(Seq((1L, "x"), (2L, "y")).toDF("k", "s"), root, retain = 5)
-    MergeInto.registerVersioned(spark, "msq_dml_vt", root)
-    spark.conf.set("spark.graft.versioned.retain", "5")
-    try {
-      MergeInto.sql(spark, "UPDATE msq_dml_vt SET s = upper(s)")
-      MergeInto.sql(spark, "DELETE FROM msq_dml_vt WHERE k = 1")
-    } finally spark.conf.unset("spark.graft.versioned.retain")
-    assert(Versioned.versions(root) == Seq(1L, 2L, 3L))
-    assert(spark.table("msq_dml_vt").as[(Long, String)].collect().toSeq == Seq(2L -> "Y"))
+    // versioned catalog table: each statement is one snapshot commit
+    val (vt, root) = catalogTable("dml_vt")
+    Seq((1L, "x"), (2L, "y")).toDF("k", "s").writeTo(vt)
+      .tableProperty("retain", "5").create()
+    MergeInto.sql(spark, s"UPDATE $vt SET s = upper(s)")
+    MergeInto.sql(spark, s"DELETE FROM $vt WHERE k = 1")
+    assert(ManifestTable.versions(root) == Seq(1L, 2L, 3L))
+    assert(spark.table(vt).as[(Long, String)].collect().toSeq == Seq(2L -> "Y"))
+    spark.sql(s"DROP TABLE $vt")
     // parser lowering for the extension path
     val p = new GraftSqlParser(spark.sessionState.sqlParser)
     assert(p.parsePlan("UPDATE a SET x = 1").isInstanceOf[graft.plans.GraftUpdateCommand])
@@ -318,39 +361,44 @@ class MergeIntoSqlSpec extends AnyFunSuite {
   test("day-scoped DELETE on a TIMESTAMP column classifies days in the session zone") {
     val prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    val (t, root) = catalogTable("tzdel")
     try {
-      val root = tmp("msq_tzdel")
+      spark.sql(s"CREATE TABLE $t (ts TIMESTAMP) PARTITIONED BY (days(ts))")
       // TIMESTAMP (instant) values at NY-local 01-14 10:00, 01-15 10:00,
       // 01-15 20:00 — partition days derive from to_date(ts) in NY time
-      val df = Seq("2024-01-14 10:00:00", "2024-01-15 10:00:00", "2024-01-15 20:00:00")
-        .toDF("s").select(to_timestamp(col("s")).as("ts"))
-      graft.sources.ManifestTable.commit(df, root, retain = 5, partitionDayOf = Some("ts"))
-      assert(graft.sources.ManifestTable.liveDays(root) === Set("2024-01-14", "2024-01-15"))
-      MergeInto.registerManifest(spark, "msq_tzdel", root, Some("ts"))
+      Seq("2024-01-14 10:00:00", "2024-01-15 10:00:00", "2024-01-15 20:00:00")
+        .toDF("s").select(to_timestamp(col("s")).as("ts")).writeTo(t).append()
+      assert(ManifestTable.liveDays(root) === Set("2024-01-14", "2024-01-15"))
       // the region covers all of NY-day 01-14 but only PART of 01-15: with
       // UTC day bounds 01-15 would be classified fully covered and the
       // 20:00 row silently dropped at the manifest (ADVICE r5, high)
       MergeInto.sql(spark,
-        "DELETE FROM msq_tzdel WHERE ts < TIMESTAMP '2024-01-15 20:00:00'")
-      val left = spark.table("msq_tzdel")
+        s"DELETE FROM $t WHERE ts < TIMESTAMP '2024-01-15 20:00:00'")
+      val left = spark.table(t)
         .select(date_format(col("ts"), "yyyy-MM-dd HH:mm").as("t")).collect()
       assert(left.map(_.getString(0)).toSeq === Seq("2024-01-15 20:00"))
-      assert(graft.sources.ManifestTable.liveDays(root) === Set("2024-01-15"))
-    } finally spark.conf.set("spark.sql.session.timeZone", prev)
+      assert(ManifestTable.liveDays(root) === Set("2024-01-15"))
+      // the day-scoped path ran: a boundary-day replace, not the full
+      // rewrite's overwrite
+      assert(ManifestTable.opOf(root, ManifestTable.currentVersion(root).get)
+        === Some("replace"))
+    } finally {
+      spark.conf.set("spark.sql.session.timeZone", prev)
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
   }
 
   test("day-scoped DELETE from a DIFFERENT session zone: drop-only runs in the writer's timeline, boundary rewrites decline") {
-    import graft.sources.ManifestTable
     val prev = spark.conf.get("spark.sql.session.timeZone")
-    val root = tmp("msq_xzone") + "/t"
+    val (t, root) = catalogTable("xzone")
     try {
       // written from a New York session: __day derives in NY local time
       spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-      val df = Seq("2024-01-14 10:00:00", "2024-01-15 10:00:00", "2024-01-15 20:00:00")
-        .toDF("s").select(to_timestamp(col("s")).as("ts"))
-      ManifestTable.commit(df, root, retain = 10, partitionDayOf = Some("ts"))
+      spark.sql(s"CREATE TABLE $t (ts TIMESTAMP) PARTITIONED BY (days(ts)) " +
+        "TBLPROPERTIES('retain'='10')")
+      Seq("2024-01-14 10:00:00", "2024-01-15 10:00:00", "2024-01-15 20:00:00")
+        .toDF("s").select(to_timestamp(col("s")).as("ts")).writeTo(t).append()
       assert(ManifestTable.liveDays(root) === Set("2024-01-14", "2024-01-15"))
-      MergeInto.registerManifest(spark, "msq_xzone", root, Some("ts"))
 
       // deleted from a UTC session. Region bound 2024-01-15 05:00 UTC IS
       // NY midnight: NY-day 01-14 is fully covered — the metadata-only
@@ -358,47 +406,50 @@ class MergeIntoSqlSpec extends AnyFunSuite {
       // deleting session sits five zones away (pre-fix, boundaries were
       // computed in the DELETING session's zone).
       spark.conf.set("spark.sql.session.timeZone", "UTC")
-      MergeInto.registerManifest(spark, "msq_xzone", root, Some("ts"))
       val day15Before = ManifestTable.manifest(root,
         ManifestTable.currentVersion(root).get).filter(_.contains("2024-01-15"))
       MergeInto.sql(spark,
-        "DELETE FROM msq_xzone WHERE ts < TIMESTAMP '2024-01-15 05:00:00'")
+        s"DELETE FROM $t WHERE ts < TIMESTAMP '2024-01-15 05:00:00'")
       val day15After = ManifestTable.manifest(root,
         ManifestTable.currentVersion(root).get).filter(_.contains("2024-01-15"))
       assert(ManifestTable.liveDays(root) === Set("2024-01-15"))
       assert(day15After === day15Before,
         "a pure whole-day drop must be metadata-only: untouched day files identical")
-      assert(spark.table("msq_xzone").count() === 2)
+      assert(spark.table(t).count() === 2)
 
       // a boundary (partial-day) delete from the mismatched zone must
       // DECLINE the fast path — the rewrite re-derives __day in the
       // deleting session's zone, which is not the table's layout zone.
       // Correctness: the full rewrite deletes exactly the predicate rows.
       MergeInto.sql(spark,
-        "DELETE FROM msq_xzone WHERE ts < TIMESTAMP '2024-01-15 16:00:00'")
-      val left = spark.table("msq_xzone")
+        s"DELETE FROM $t WHERE ts < TIMESTAMP '2024-01-15 16:00:00'")
+      val left = spark.table(t)
         .select(date_format(col("ts"), "yyyy-MM-dd HH:mm").as("t"))
         .collect().map(_.getString(0)).toSeq
       assert(left === Seq("2024-01-16 01:00"),
         s"NY 10:00 = 15:00Z deleted, NY 20:00 = 16th 01:00Z kept; got $left")
     } finally {
       spark.conf.set("spark.sql.session.timeZone", prev)
-      spark.catalog.dropTempView("msq_xzone")
+      spark.sql(s"DROP TABLE IF EXISTS $t")
     }
   }
 
   test("full-rewrite DML carries manifest props (streaming idempotence markers)") {
-    val root = tmp("msq_props")
+    val (t, root) = catalogTable("props")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v DOUBLE)")
     val df = Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v")
-    graft.sources.ManifestTable.append(df, root,
-      props = Map("stream.app1.batch" -> "7"))
-    MergeInto.registerManifest(spark, "msq_props", root)
-    MergeInto.sql(spark, "UPDATE msq_props SET v = v + 1 WHERE k = 1")
+    // a streaming sink's batch 7 lands with its idempotence marker
+    assert(graft.streaming.MicroBatch.appendBatchIdempotent(df, root, "app1", 7L))
+    assert(ManifestTable.liveProps(root).get("stream.app1.batch").contains("7"))
+    MergeInto.sql(spark, s"UPDATE $t SET v = v + 1 WHERE k = 1")
+    assert(ManifestTable.opOf(root, ManifestTable.currentVersion(root).get)
+      === Some("overwrite"), "the UPDATE must take the full-rewrite path")
     // the rewrite continued the table's history: the marker survived, so a
     // foreachBatch replay of batch 7 is still detected and skipped
-    assert(graft.sources.ManifestTable.liveProps(root)
-      .get("stream.app1.batch").contains("7"))
+    assert(ManifestTable.liveProps(root).get("stream.app1.batch").contains("7"))
     assert(!graft.streaming.MicroBatch.appendBatchIdempotent(df, root, "app1", 7L))
+    assert(spark.table(t).as[(Long, Double)].collect().toMap == Map(1L -> 2.0, 2L -> 2.0))
+    spark.sql(s"DROP TABLE $t")
   }
 
   test("cross-typed equi keys decline the source-side guard: coerce-equal duplicates still raise") {

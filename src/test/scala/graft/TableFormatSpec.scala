@@ -118,12 +118,11 @@ class TableFormatSpec extends AnyFunSuite {
     assert(Versioned.readVersion(spark, root, 1L).count() === 200)
   }
 
-  test("rollback + tags: pointer-only rollback, post-rollback commits allocate above history, tags pin against GC") {
+  test("rollback: pointer-only rollback, post-rollback commits allocate above history") {
     import spark.implicits._
-    val root = Files.createTempDirectory("vtag").toString + "/t"
+    val root = Files.createTempDirectory("vrollback").toString + "/t"
     Versioned.commit(Seq((1L, "a")).toDF("k", "v"), root, retain = 3)        // v=1
     Versioned.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root, retain = 3) // v=2
-    Versioned.tag(root, "audit-v1", Some(1L))
 
     // rollback is a pointer flip; younger snapshot stays retained
     Versioned.rollback(root, 1L)
@@ -136,17 +135,8 @@ class TableFormatSpec extends AnyFunSuite {
     assert(v3 === 3L)
     assert(Versioned.readVersion(spark, root, 2L).count() === 2,
       "post-rollback commit must not overwrite retained history")
-
-    // retention GC would drop v=1 (3 - retain 2), but the tag pins it
-    assert(Versioned.versions(root).contains(1L), "tagged snapshot must survive GC")
-    assert(Versioned.readTag(spark, root, "audit-v1").count() === 1)
-    assert(Versioned.tags(root) === Map("audit-v1" -> 1L))
-
-    // dropping the tag lets the NEXT commit's GC reap it
-    Versioned.dropTag(root, "audit-v1")
-    Versioned.commit(Seq((7L, "q")).toDF("k", "v"), root, retain = 2)        // v=4
-    assert(!Versioned.versions(root).contains(1L))
-    intercept[IllegalArgumentException](Versioned.readTag(spark, root, "audit-v1"))
+    // retention GC ages out v=1 (3 - retain 2)
+    assert(Versioned.versions(root) === Seq(2L, 3L))
   }
 
   test("snapshot history: one row per retained version, live flagged") {
@@ -179,35 +169,6 @@ class TableFormatSpec extends AnyFunSuite {
     assert(changes(1L) === (("delete", "a", null)))
     assert(changes(2L) === (("update", "b", "B")))
     assert(changes(4L) === (("insert", null, "d")))
-  }
-
-  test("hidden day partitioning: clean user schema, derived partition pruning") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("vhidden").toString + "/t"
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    val df = Seq(
-      (1L, t("2024-01-01 10:00:00"), 5.0),
-      (2L, t("2024-01-02 11:00:00"), 6.0),
-      (3L, t("2024-01-02 23:30:00"), 7.0),
-      (4L, t("2024-01-03 08:00:00"), 8.0)
-    ).toDF("id", "ts", "value")
-    Versioned.commit(df, root, partitionDayOf = Some("ts"))
-
-    // user schema never shows the transform column
-    assert(Versioned.read(spark, root).columns.sorted.toSeq === Seq("id", "ts", "value"))
-    assert(Versioned.read(spark, root).count() === 4)
-
-    // day dirs exist on disk (the physical layout the transform buys)
-    val vdir = new java.io.File(Versioned.currentPath(root).get)
-    assert(vdir.listFiles.exists(_.getName.startsWith("__day=")))
-
-    // a ts-range read prunes partitions without the caller naming __day
-    val ranged = Versioned.readDayRange(spark, root, "ts",
-      "2024-01-02 00:00:00", "2024-01-03 00:00:00")
-    assert(ranged.collect().map(_.getLong(0)).sorted.toSeq === Seq(2L, 3L))
-    val plan = ranged.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("__day"),
-      "derived day predicate must reach PartitionFilters:\n" + plan.take(800))
   }
 
   test("saveAsTable durability: data lives in the warehouse dir, readable without the catalog") {
@@ -342,7 +303,7 @@ class TableFormatSpec extends AnyFunSuite {
       .select("k").as[Long].collect().toSeq === Seq(1L, 9L, 102L))
   }
 
-  test("versioned table on an explicit file:// Hadoop URI: commit, time travel, tags, rollback") {
+  test("versioned table on an explicit file:// Hadoop URI: commit, time travel, rollback") {
     import spark.implicits._
     val root = "file://" + Files.createTempDirectory("versioned_scheme").toString + "/t"
     Versioned.commit(Seq((1L, "a")).toDF("k", "v"), root, retain = 5)
@@ -350,9 +311,6 @@ class TableFormatSpec extends AnyFunSuite {
     assert(Versioned.currentVersion(root).contains(2L))
     assert(Versioned.read(spark, root).count() === 2)
     assert(Versioned.readVersion(spark, root, 1L).count() === 1)
-    assert(Versioned.tag(root, "audit", Some(1L)) === 1L)
-    assert(Versioned.tags(root) === Map("audit" -> 1L))
-    assert(Versioned.readTag(spark, root, "audit").count() === 1)
     Versioned.rollback(root, 1L)
     assert(Versioned.read(spark, root).count() === 1)
     assert(Versioned.history(spark, root).count() === 2)
@@ -436,52 +394,6 @@ class TableFormatSpec extends AnyFunSuite {
     assert(ManifestTable.read(spark, root).orderBy("k")
       .select("k").as[Long].collect().toSeq === Seq(2L, 3L))
     assert(ManifestTable.history(spark, root).count() === 3)
-  }
-
-  test("branches + write-audit-publish: audit sees the branch, main is untouched until publish, rollback composes") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("versioned_wap").toString + "/t"
-    Versioned.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root, retain = 10)
-
-    // WRITE: stage the next state on a branch — main must not move
-    Versioned.createBranch(root, "audit")
-    val staged = Versioned.commitToBranch(
-      Seq((1L, "a"), (2L, "B"), (3L, "c")).toDF("k", "v"), root, "audit")
-    assert(Versioned.currentVersion(root).contains(1L), "main moved before publish")
-    assert(Versioned.read(spark, root).count() === 2)
-    assert(Versioned.branches(root) === Map("audit" -> staged))
-
-    // AUDIT: queries over the branch see the staged snapshot
-    val audited = Versioned.readBranch(spark, root, "audit")
-      .orderBy("k").as[(Long, String)].collect().toSeq
-    assert(audited === Seq(1L -> "a", 2L -> "B", 3L -> "c"))
-
-    // a main commit while the branch is staged: both coexist, the branch
-    // head is GC-pinned
-    Versioned.commit(Seq((9L, "z")).toDF("k", "v"), root, retain = 1)
-    assert(Versioned.readBranch(spark, root, "audit").count() === 3,
-      "an unpublished branch head must survive main-side GC")
-
-    // PUBLISH: one pointer flip — main now reads the AUDITED bytes
-    val preMain = Versioned.currentVersion(root).get
-    Versioned.publishBranch(root, "audit")
-    assert(Versioned.read(spark, root).orderBy("k").as[(Long, String)]
-      .collect().toSeq === audited)
-
-    // a failed audit never publishes: stage junk, audit rejects, drop
-    Versioned.createBranch(root, "audit2")
-    Versioned.commitToBranch(Seq((99L, "junk")).toDF("k", "v"), root, "audit2")
-    val mainBefore = Versioned.read(spark, root).count()
-    Versioned.dropBranch(root, "audit2")
-    assert(Versioned.read(spark, root).count() === mainBefore)
-    assert(Versioned.branches(root).keySet === Set("audit"))
-
-    // rollback interplay: publish then roll back to the pre-publish head;
-    // the next commit still allocates above every retained version
-    Versioned.rollback(root, preMain)
-    assert(Versioned.currentVersion(root).contains(preMain))
-    val after = Versioned.commit(Seq((7L, "q")).toDF("k", "v"), root, retain = 10)
-    assert(after > Versioned.versions(root).filter(_ != after).max)
   }
 
   test("commit fencing: a reclaimed-midflight committer fails loudly, never publishes the racer's manifest as its own") {
