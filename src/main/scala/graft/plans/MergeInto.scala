@@ -72,6 +72,7 @@ object MergeInto {
   private val KEEP = "__graft_keep"
   private val ACT  = "__graft_act"   // MOR merge row action: u/d/i
   private val PRE  = "__graft_pre_"  // classified-merge pre-image column prefix
+  private val LAND = "__graft_land"  // scoped-merge discovery: insert landing day
 
   /** A `cat.ns.tbl` identifier of a [[graft.sources.v2.VersionedCatalog]]:
     * commits go through the manifest and readers resolve the pointer via
@@ -366,8 +367,10 @@ object MergeInto {
     * the merge over ONLY those days, and commit a manifest that reuses
     * every other day's files untouched. Falls back to a full rewrite
     * (returns false) when an insert's partition day can't be derived
-    * statically. Extra cost vs the full path: one inner + one anti join
-    * for discovery — both prunable, both tiny output (distinct days). */
+    * statically. Four statements: the source pin, one key summary over
+    * it ([[sourceKeySummary]]), one discovery join — the source LEFT
+    * OUTER JOIN the key-pruned target, one target scan, distinct-day
+    * output — and the rewrite. */
   private def executeScopedMerge(spark: SparkSession, tgt: Target, root: String,
                                  tsCol: String, source0: DataFrame,
                                  m: MergeIntoTable): Boolean = {
@@ -426,28 +429,28 @@ object MergeInto {
     // the MERGE path): pre-filter the probe's target side by the
     // source's join-key values ([[sourceKeyPredicate]] — a sound
     // superset of the matched rows), so the static predicate reaches the
-    // manifest's per-file stats pruning and BOTH discovery joins read
-    // only candidate files instead of the whole table. matchDays stays
-    // exact (a filtered-out row matches nothing); the anti join's
-    // classification is unchanged for the same reason.
+    // manifest's per-file stats pruning and the discovery join reads
+    // only candidate files instead of the whole table. The day set stays
+    // exact: a filtered-out target row matches no source row.
     val split = splitCondition(m.mergeCondition, targetCols, tgt.alias,
       source.columns.toSeq, splitAlias(m.sourceTable)._2)
     val probeT = sourceKeyPredicate(split, source, tRaw, spark)
-      .map(tRaw.where).getOrElse(tRaw)
-    // days holding matched target rows (inner join, distinct-day output)
-    val matchDays = probeT.join(source, cond, "inner")
-      .select(col(ManifestTable.DayCol).cast("string")).distinct()
-    // days where inserted rows will land (superset is fine: an extra
-    // touched day is rewritten as identity, never wrong)
-    val sOnly = source.join(probeT, cond, "left_anti")
-    val insertDays = insertTsExprs.map { case (c, tsVal) =>
-      sOnly.where(c.map(GraftColumnBridge.column).getOrElse(lit(true)))
-        .select(to_date(tsVal).cast("string"))
-    }.reduceOption(_ unionAll _).map(_.distinct())
-    val daysDf = insertDays match {
-      case Some(ins) => matchDays.unionAll(ins).distinct()
-      case None      => matchDays
+      .map(tRaw.where).getOrElse(tRaw).withColumn(TP, lit(true))
+    // the day a NOT MATCHED source row lands in: the first insert clause
+    // whose condition holds decides, as in the merge itself (NULL when
+    // none does — the row inserts nothing). Evaluated on the source
+    // alone, where the clauses' unqualified names resolve.
+    val landing = insertTsExprs.foldRight(lit(null).cast("string")) {
+      case ((c, tsVal), rest) =>
+        when(c.map(GraftColumnBridge.column).getOrElse(lit(true)),
+          to_date(tsVal).cast("string")).otherwise(rest)
     }
+    // ONE target scan and ONE join give the exact touched-day set: a
+    // source row that matched contributes every matched target row's
+    // day, one that matched nothing contributes its landing day
+    val daysDf = source.withColumn(LAND, landing).join(probeT, cond, "left_outer")
+      .select(when(col(TP).isNotNull, col(ManifestTable.DayCol).cast("string"))
+        .otherwise(col(LAND))).distinct()
     val days = daysDf.collect().map(_.getString(0)).filter(_ != null).toSet
     // executed-plan evidence of the DISCOVERY read (the `lastMergeScan`
     // registry the mor_merge_prune oracle reads): how many target data
@@ -1142,8 +1145,7 @@ object MergeInto {
                                alias: String, cond: Option[Expression])
       : Seq[org.apache.spark.sql.sources.Filter] =
     cond match {
-      case Some(c) if
-          spark.conf.get("spark.graft.dml.predicatePrune", "true").toBoolean =>
+      case Some(c) =>
         scala.util.Try {
           val empty = spark.createDataFrame(
             new java.util.ArrayList[Row](), meta.schema).alias(alias)
@@ -1182,19 +1184,52 @@ object MergeInto {
       case _ => Nil
     }
 
-  /** The staging batch's join-key sets/bounds as v1 pushdown filters for
-    * [[morRead]]'s manifest pruning: per equi key column, the source's
-    * DISTINCT non-null values as an `In` filter when they fit the cap
-    * (`spark.graft.merge.pruneMaxKeys`, default 1000 — an In verdict per
-    * file is linear in the set), else its [min, max] bounds. A source
-    * with NO non-null keys can match nothing — `AlwaysFalse` prunes every
-    * file (the merge is then pure inserts over morRead's single kept
-    * file). Filters speak PHYSICAL column names (what file stats carry).
-    * Cost: one distinct-limit (or min/max) job per key column over the
-    * staging batch — the side that is small by construction; the payoff
-    * is the target table NOT being read. Any resolution failure returns
-    * no filter for that column (pruning is optional, the join is the
-    * truth).
+  /** A source join-key column as the prune paths see it: no non-null
+    * value (nothing can match), its distinct values (at most
+    * `spark.graft.merge.pruneMaxKeys`, default 1000 — an In verdict per
+    * file is linear in the set), or past the cap its [min, max] bounds. */
+  private sealed trait KeySummary
+  private case object NoKeys extends KeySummary
+  private case class KeySet(vals: Seq[Any]) extends KeySummary
+  private case class KeyBounds(lo: Any, hi: Any) extends KeySummary
+
+  /** The staging batch's join keys summarized in ONE aggregate statement
+    * over the (pinned) source: per column a capped distinct set
+    * ([[graft.functions.CappedSetAgg]] — the driver receives at most
+    * `cap + 1` values per column) beside its min and max. Both prune
+    * paths render from it: [[sourceKeyPredicate]] (the copy-on-write
+    * discovery probe) and [[sourceKeyFilters]] (merge-on-read `morRead`).
+    * None when the statement fails — pruning is optional, the join is
+    * the truth. */
+  private def sourceKeySummary(source: DataFrame, cols: Seq[String],
+                               spark: SparkSession): Option[Map[String, KeySummary]] = {
+    val cap = spark.conf.get("spark.graft.merge.pruneMaxKeys", "1000").toInt
+    val keyCols = cols.distinct
+    scala.util.Try {
+      val aggs = keyCols.flatMap { c =>
+        val sc = source(c)
+        Seq(GraftColumnBridge.column(graft.functions.CappedSetAgg(
+          GraftColumnBridge.expression(sc), cap).toAggregateExpression()), min(sc), max(sc))
+      }
+      val r = source.agg(aggs.head, aggs.tail: _*).collect()(0)
+      keyCols.zipWithIndex.map { case (c, i) =>
+        val vals = r.getSeq[Any](3 * i)
+        c -> (if (vals.isEmpty) NoKeys
+          else if (vals.length <= cap) KeySet(vals)
+          else KeyBounds(r.get(3 * i + 1), r.get(3 * i + 2)))
+      }.toMap
+    }.toOption
+  }
+
+  /** The staging batch's join-key sets/bounds ([[sourceKeySummary]]) as
+    * v1 pushdown filters for [[morRead]]'s manifest pruning: per equi
+    * key column an `In` filter, or `>=`/`<=` bounds past the cap. A
+    * source with NO non-null keys can match nothing — `AlwaysFalse`
+    * prunes every file (the merge is then pure inserts over morRead's
+    * single kept file). Filters speak PHYSICAL column names (what file
+    * stats carry). Cost: the one summary statement over the staging
+    * batch — the side that is small by construction; the payoff is the
+    * target table NOT being read.
     *
     * CROSS-TYPED pairs emit NO filter: the prune verdict evaluates in
     * the target column's stats domain while the join compares in the
@@ -1210,67 +1245,56 @@ object MergeInto {
                                spark: SparkSession)
       : Seq[org.apache.spark.sql.sources.Filter] = {
     import org.apache.spark.sql.{sources => f}
-    if (equi.isEmpty) return Nil
-    val cap = spark.conf.get("spark.graft.merge.pruneMaxKeys", "1000").toInt
-    equi.flatMap { case (tCol, sCol) =>
-      scala.util.Try {
-        val tTag = meta.schema.fields.find(_.name.equalsIgnoreCase(tCol))
-          .map(_.dataType).flatMap(graft.sources.FileStats.tagOf)
-        val sTag = source0.schema.fields.find(_.name.equalsIgnoreCase(sCol))
-          .map(_.dataType).flatMap(graft.sources.FileStats.tagOf)
-        if (tTag.isEmpty || tTag != sTag) Nil // cross-typed pair: no filter
-        else {
-          val phys = meta.physicalName(tCol)
-          val sc = source0(sCol)
-          val vals = source0.select(sc).where(sc.isNotNull).distinct()
-            .limit(cap + 1).collect().map(_.get(0))
-          if (vals.isEmpty) Seq(f.AlwaysFalse(): f.Filter)
-          else if (vals.length <= cap) Seq(f.In(phys, vals): f.Filter)
-          else {
-            val r = source0.agg(min(sc), max(sc)).collect()(0)
-            Seq(f.GreaterThanOrEqual(phys, r.get(0)): f.Filter,
-              f.LessThanOrEqual(phys, r.get(1)): f.Filter)
-          }
+    def tagOf(schema: StructType, c: String) = schema.fields
+      .find(_.name.equalsIgnoreCase(c)).map(_.dataType)
+      .flatMap(graft.sources.FileStats.tagOf)
+    val sameTyped = equi.filter { case (tCol, sCol) =>
+      val tTag = tagOf(meta.schema, tCol)
+      tTag.nonEmpty && tTag == tagOf(source0.schema, sCol)
+    }
+    if (sameTyped.isEmpty) return Nil
+    sourceKeySummary(source0, sameTyped.map(_._2), spark).fold(Seq.empty[f.Filter]) { keys =>
+      sameTyped.flatMap { case (tCol, sCol) =>
+        val phys = meta.physicalName(tCol)
+        keys(sCol) match {
+          case NoKeys            => Seq(f.AlwaysFalse())
+          case KeySet(vals)      => Seq(f.In(phys, vals.toArray))
+          case KeyBounds(lo, hi) =>
+            Seq(f.GreaterThanOrEqual(phys, lo), f.LessThanOrEqual(phys, hi))
         }
-      }.getOrElse(Nil)
+      }
     }
   }
 
-  /** The staging batch's join-key sets/bounds as a PUSHABLE target-side
-    * predicate for the scoped-merge DISCOVERY probe: per equi pair, the
-    * source's distinct non-null values as an `isin` over the target
-    * column (its [min, max] bounds past `spark.graft.merge.pruneMaxKeys`).
-    * A SOUND SUPERSET of the matched target rows — a matched row equals
-    * some source row on every equi pair whatever the other conjuncts do
-    * — so the inner probe's day set stays exact and the anti probe's
-    * not-matched classification is unchanged (a filtered-out target row
-    * can match no source row). Unlike [[sourceKeyFilters]] this is an
-    * ENGINE predicate: Catalyst evaluates it in the same coerced domain
-    * as the join, so cross-typed pairs stay sound (they simply don't
-    * push past the coercion cast); same-typed pairs push to the catalog
-    * scan, whose manifest stats pruning then hands the probe ONLY the
-    * candidate files. `lit(false)` when a pair has no non-null source
-    * values (nothing can match). None = no equi pairs / pruning off /
-    * a source job failed — the probe runs unfiltered. */
+  /** The staging batch's join-key sets/bounds ([[sourceKeySummary]]) as
+    * a PUSHABLE target-side predicate for the scoped-merge DISCOVERY
+    * probe: per equi pair an `isin` over the target column, or its
+    * [min, max] bounds past the cap. A SOUND SUPERSET of the matched
+    * target rows — a matched row equals some source row on every equi
+    * pair whatever the other conjuncts do — so the probe's day set
+    * stays exact (a filtered-out target row can match no source row).
+    * Unlike [[sourceKeyFilters]] this is an ENGINE predicate: Catalyst
+    * evaluates it in the same coerced domain as the join, so
+    * cross-typed pairs stay sound (they simply don't push past the
+    * coercion cast); same-typed pairs push to the catalog scan, whose
+    * manifest stats pruning then hands the probe ONLY the candidate
+    * files. `lit(false)` when a pair has no non-null source values
+    * (nothing can match). None = no equi pairs / pruning off / the
+    * summary failed — the probe runs unfiltered. */
   private def sourceKeyPredicate(split: CondSplit, source: DataFrame,
                                  t: DataFrame, spark: SparkSession): Option[Column] = {
     if (split.equi.isEmpty ||
         !spark.conf.get("spark.graft.merge.targetPrune", "true").toBoolean)
       return None
-    val cap = spark.conf.get("spark.graft.merge.pruneMaxKeys", "1000").toInt
-    scala.util.Try {
+    sourceKeySummary(source, split.equi.map(_._2), spark).map { keys =>
       split.equi.map { case (tc, sc) =>
-        val scol = source(sc)
-        val vals = source.select(scol).where(scol.isNotNull).distinct()
-          .limit(cap + 1).collect().map(_.get(0))
-        if (vals.isEmpty) lit(false)
-        else if (vals.length <= cap) t(tc).isin(vals.toIndexedSeq: _*)
-        else {
-          val r = source.agg(min(scol), max(scol)).collect()(0)
-          t(tc) >= lit(r.get(0)) && t(tc) <= lit(r.get(1))
+        keys(sc) match {
+          case NoKeys            => lit(false)
+          case KeySet(vals)      => t(tc).isin(vals: _*)
+          case KeyBounds(lo, hi) => t(tc) >= lit(lo) && t(tc) <= lit(hi)
         }
       }.reduce(_ && _)
-    }.toOption
+    }
   }
 
   /** The day set as a typed ts-RANGE predicate in the recorded timeline —

@@ -306,9 +306,14 @@ object FileStats {
 
   private def parquetStats(path: String, schema: StructType,
                            conf: Configuration): Map[String, ColStats] = {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+    // read options from the caller's conf: the no-options open builds
+    // them over a fresh Hadoop Configuration, which reloads the default
+    // XML resources from the jars for every file
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf),
+      HadoopReadOptions.builder(conf).build())
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       if (blocks.isEmpty) return Map(rowsEntry(0L))

@@ -1042,11 +1042,6 @@ object ManifestTable {
       (kv.get("ndv"), kv.get("histogram"))
     }.getOrElse((None, None))
 
-  /** Per-file column stats collection toggle (footer reads at commit). */
-  private def fileStatsEnabled: Boolean =
-    SparkSession.getActiveSession.flatMap(
-      _.conf.getOption("spark.graft.manifest.fileStats")).forall(_.toBoolean)
-
   /** Write `df`'s files into the pool (staged, then moved in — invisible
     * until a manifest references them) and return their manifest entries.
     * Each new parquet/orc file's per-column min/max/null stats are read
@@ -1168,7 +1163,6 @@ object ManifestTable {
       df.schema.fields.filterNot(f =>
         partitionCols.exists(_.equalsIgnoreCase(f.name))))
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val withStats = fileStatsEnabled
     val entries = MetaIO.listFilesRec(stage)
       .filter(_.getPath.getName.endsWith(s".$format"))
       .map { st =>
@@ -1176,9 +1170,7 @@ object ManifestTable {
         val sub = rel0.split('/').dropRight(1).mkString("/") // "" or partition dirs
         val name = s"${UUID.randomUUID().toString.take(16)}.$format"
         val rel = if (sub.isEmpty) name else s"$sub/$name"
-        val stats =
-          if (withStats) FileStats.collect(st.getPath.toString, format, fileSchema, conf)
-          else None
+        val stats = FileStats.collect(st.getPath.toString, format, fileSchema, conf)
         MetaIO.rename(st.getPath.toString, s"$root/data/$rel")
         // stamp POOL-ENTRY time: rename preserves the Spark write mtime,
         // which for a slow multi-minute write is already older than the
@@ -1679,14 +1671,12 @@ object ManifestTable {
                                        overwrite: Boolean,
                                        props: Map[String, String]): Long = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val withStats = fileStatsEnabled
     // the WRITER's format, passed explicitly: an empty table has no live
     // entries to infer it from, and a mis-suffixed pool name would corrupt
     // the manifest's per-extension read dispatch
     val fmt = format
     val entries = staged.map { case (p, sub) =>
-      val stats =
-        if (withStats) FileStats.collect(p, fmt, schema, conf) else None
+      val stats = FileStats.collect(p, fmt, schema, conf)
       val len = MetaIO.size(p)
       val base = s"${UUID.randomUUID().toString.take(16)}.$fmt"
       val name = if (sub.isEmpty) base else s"$sub/$base"

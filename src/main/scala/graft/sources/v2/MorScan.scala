@@ -270,7 +270,8 @@ private[graft] object MorDeletes {
     if (splitStart == 0L) return 0L
     import scala.jdk.CollectionConverters._
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
     try reader.getFooter.getBlocks.asScala
       .filter(b => b.getStartingPos + b.getCompressedSize / 2 < splitStart)
       .map(_.getRowCount).sum

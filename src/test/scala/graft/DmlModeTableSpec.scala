@@ -651,4 +651,157 @@ class DmlModeTableSpec extends AnyFunSuite {
     assert(o === tot, s"cross-typed key must skip pruning (opened=$o total=$tot)")
     spark.sql(s"DROP TABLE $t")
   }
+
+  /** A 10-day table, 200 rows a day, `k` following `ts`: day d
+    * (2024-03-01 + d) holds k in [200d, 200d + 200), one file each. */
+  private def tenDays(t: String): Unit = {
+    import org.apache.spark.sql.functions.{col, expr}
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.range(0, 2000).select(
+        col("id").as("k"),
+        expr("timestamp_ntz '2024-03-01 00:00:00' + make_interval(0,0,0,0,0,0, id * 432)").as("ts"),
+        (col("id") % 97).cast("double").as("v"))
+      .writeTo(t)
+      .partitionedBy(org.apache.spark.sql.functions.partitioning.days(col("ts")))
+      .create()
+  }
+  private def day(d: Int): String = s"2024-03-${"%02d".format(d + 1)}"
+  private def noon(d: Int) = java.time.LocalDate.parse(day(d)).atTime(12, 0)
+  private def dayFiles(r: String): Map[String, Set[String]] =
+    ManifestTable.liveEntries(r).map(_.rel)
+      .filterNot(ManifestTable.isDeleteEntry)
+      .groupBy(ManifestTable.keyOf).map { case (k, v) => k -> v.toSet }
+
+  test("day-scoped CoW MERGE discovery: pin, key summary, ONE single-scan join, rewrite") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import spark.implicits._
+    val t = "gdm.ns.cowstmt"
+    tenDays(t)
+    // more keys than the cap (the bounds path) plus an insert: still one
+    // key-summary statement and one discovery join
+    ((400L until 450L).map(k => (Option(k), noon(2), -1.0)) ++
+      Seq((Option(90001L), noon(8), 5.0)))
+      .toDF("k", "ts", "v").createOrReplaceTempView("cowstmt_src")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f -> qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(f -> qe)
+    }
+    spark.conf.set("spark.graft.merge.pruneMaxKeys", "20")
+    spark.listenerManager.register(listener)
+    val stmts = try {
+      graft.plans.MergeInto.sql(spark,
+        s"""MERGE INTO $t t USING cowstmt_src s ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET v = s.v
+           |WHEN NOT MATCHED THEN INSERT (k, ts, v) VALUES (s.k, s.ts, s.v)""".stripMargin)
+      // the listener bus delivers in order: once this marker statement
+      // arrives, every statement the MERGE ran has too
+      spark.range(0, 7, 1, 1).collect()
+      import scala.jdk.CollectionConverters._
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def isMarker(qe: QueryExecution) = qe.logical.collectFirst {
+        case r: org.apache.spark.sql.catalyst.plans.logical.Range if r.end == 7 => r
+      }.nonEmpty
+      while (!seen.asScala.exists(e => isMarker(e._2)) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      seen.asScala.toSeq.takeWhile { case (_, qe) => !isMarker(qe) }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.unset("spark.graft.merge.pruneMaxKeys")
+    }
+    val inner = stmts.filterNot { case (_, qe) =>
+      qe.logical.collectFirst { case c: graft.plans.GraftMergeCommand => c }.nonEmpty }
+    assert(stmts.size - inner.size === 1, s"one MERGE command: ${stmts.map(_._1)}")
+    assert(inner.size === 4,
+      s"pin, key summary, discovery, rewrite — got ${inner.map(_._1)}")
+    def nodes(qe: QueryExecution) =
+      graft.sources.v2.GraftScans.executedNodes(qe.executedPlan)
+    val withJoin = inner.filter { case (_, qe) => nodes(qe).exists(_.isInstanceOf[BaseJoinExec]) }
+    val discovery = withJoin.filter { case (f, _) => f == "collect" }
+    assert(discovery.size === 1, s"one discovery statement: ${inner.map(_._1)}")
+    val dn = nodes(discovery.head._2)
+    assert(dn.count(_.isInstanceOf[BatchScanExec]) === 1,
+      s"discovery scans the target once:\n${discovery.head._2.executedPlan}")
+    assert(!dn.exists {
+      case j: BaseJoinExec => j.joinType == LeftAnti
+      case _ => false
+    }, s"no anti probe:\n${discovery.head._2.executedPlan}")
+    // and the merge did its work
+    assert(spark.table(t).where("v = -1.0").count() === 50L)
+    assert(spark.table(t).count() === 2001L)
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("day-scoped CoW MERGE rewrites exactly the touched days and equals the full-rewrite twin") {
+    import spark.implicits._
+    // each case runs the scoped MERGE and the partitionScoped=false twin;
+    // `changed` is the exact set of days whose file set may move
+    def twinCase(name: String, src: org.apache.spark.sql.DataFrame, clauses: String,
+                 changed: Set[Int], confs: Map[String, String] = Map.empty,
+                 pruned: Boolean = false): Unit = {
+      val t = s"gdm.ns.dtw_$name"; val twin = s"gdm.ns.dtw_${name}_full"
+      Seq(t, twin).foreach(tenDays)
+      src.createOrReplaceTempView(s"dtw_${name}_src")
+      def stmt(tbl: String) =
+        s"MERGE INTO $tbl t USING dtw_${name}_src s ON t.k = s.k $clauses"
+      val r = root(s"dtw_$name")
+      val before = dayFiles(r)
+      def withConfs(cs: Map[String, String])(body: => Unit): Unit = {
+        cs.foreach { case (k, v) => spark.conf.set(k, v) }
+        try body finally cs.keys.foreach(spark.conf.unset)
+      }
+      withConfs(confs)(graft.plans.MergeInto.sql(spark, stmt(t)))
+      if (pruned) {
+        val (o, tot) = graft.plans.MergeInto.lastMergeScan.get(r)
+        assert(o * 2 <= tot, s"$name: the key summary must prune the probe ($o of $tot)")
+      }
+      withConfs(confs + ("spark.graft.merge.partitionScoped" -> "false"))(
+        graft.plans.MergeInto.sql(spark, stmt(twin)))
+      assert(spark.table(t).orderBy("k", "ts", "v").collect().toSeq ===
+        spark.table(twin).orderBy("k", "ts", "v").collect().toSeq, s"$name: twin rows")
+      val after = dayFiles(r)
+      val moved = before.keySet.filter(k => after.get(k) != Some(before(k)))
+      assert(moved === changed.map(d => s"${ManifestTable.DayCol}=${day(d)}"),
+        s"$name: only the touched days may change")
+      spark.sql(s"DROP TABLE $t"); spark.sql(s"DROP TABLE $twin")
+    }
+    // update-only: the source ts sits on day 7, the matches on day 2
+    twinCase("upd",
+      (400L until 410L).map(k => (k, noon(7), -1.0)).toDF("k", "ts", "v"),
+      "WHEN MATCHED THEN UPDATE SET v = s.v", changed = Set(2))
+    // conditional insert: accepted rows land on day 4, rejected ones sit
+    // on day 6, the matched rows' source ts on day 9
+    twinCase("cins",
+      ((400L until 405L).map(k => (k, noon(9), -1.0)) ++
+        Seq((90001L, noon(4), 2.0), (90002L, noon(6), -3.0),
+          (90003L, noon(6), 0.0))).toDF("k", "ts", "v"),
+      "WHEN MATCHED THEN UPDATE SET v = s.v " +
+        "WHEN NOT MATCHED AND s.v > 0 THEN INSERT (k, ts, v) VALUES (s.k, s.ts, s.v)",
+      changed = Set(2, 4))
+    // a matched UPDATE moves rows from day 2 to day 5: day 2 rewrites,
+    // day 5 receives the moved rows
+    twinCase("move",
+      (400L until 410L).map(k => (k, noon(5), -1.0)).toDF("k", "ts", "v"),
+      "WHEN MATCHED THEN UPDATE SET ts = s.ts, v = s.v", changed = Set(2, 5))
+    // all-null keys match nothing: pure inserts landing on day 3
+    twinCase("nulls",
+      Seq((Option.empty[Long], noon(3), 1.0),
+        (Option.empty[Long], noon(3), 2.0)).toDF("k", "ts", "v"),
+      "WHEN MATCHED THEN UPDATE SET v = s.v " +
+        "WHEN NOT MATCHED THEN INSERT (k, ts, v) VALUES (s.k, s.ts, s.v)",
+      changed = Set(3))
+    // more keys than pruneMaxKeys: the [min, max] bounds still prune the
+    // probe to day 1; null-key inserts land on day 8
+    twinCase("bounds",
+      ((200L until 300L).map(k => (Option(k), noon(1), -1.0)) ++
+        Seq((Option.empty[Long], noon(8), 4.0))).toDF("k", "ts", "v"),
+      "WHEN MATCHED THEN UPDATE SET v = s.v " +
+        "WHEN NOT MATCHED THEN INSERT (k, ts, v) VALUES (s.k, s.ts, s.v)",
+      changed = Set(1, 8), confs = Map("spark.graft.merge.pruneMaxKeys" -> "20"),
+      pruned = true)
+  }
 }
